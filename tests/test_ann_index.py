@@ -527,3 +527,43 @@ def test_replay_race_never_rewrites_live_generation_in_place(
     assert not os.path.exists(staged)
     assert idx._vectors().count() == n_before
     assert log.current().live.count(gen_a) == 1
+
+
+def test_rebuild_after_path_deleted_serves_new_rows(
+    spark, index_df, centroids_df, probe, tmp_path_factory
+):
+    """Deleting an index directory and building again at the same path
+    restarts the vectors manifest at version 1. The live-scan memo and
+    the codebook memo are keyed on the live generation names, which are
+    unique, so neither the new build nor a long-lived served instance
+    answers from the deleted generation."""
+    import shutil
+
+    path = str(tmp_path_factory.mktemp("ivf_recreate"))
+    first = IvfIndex.build(index_df, path=path, centroids_df=centroids_df)
+    served = IvfIndex(spark, path)
+    assert max(r["vec_id"] for r in first.topk(probe, nprobe=2, limit=5).collect()) < 10**6
+    served.topk(probe, nprobe=2, limit=5).collect()
+    shutil.rmtree(path)
+    shifted = index_df.select((F.col("vec_id") + 10**6).alias("vec_id"), "vector")
+    again = IvfIndex.build(shifted, path=path, centroids_df=centroids_df)
+    assert again.vectors_log.current().version == first.vectors_log.current().version
+    for idx in (again, served):
+        got = idx.topk(probe, nprobe=2, limit=5).collect()
+        assert len(got) == 5 and min(r["vec_id"] for r in got) >= 10**6
+
+
+def test_lsh_rebuild_after_path_deleted_serves_new_rows(
+    spark, index_df, probe, tmp_path_factory
+):
+    import shutil
+
+    path = str(tmp_path_factory.mktemp("lsh_recreate"))
+    first = LshIndex.build(index_df, path=path, num_planes=12, dim=64)
+    got = first.topk(probe, max_probe_hamming=2, limit=5).collect()
+    assert got and max(r["vec_id"] for r in got) < 10**6
+    shutil.rmtree(path)
+    shifted = index_df.select((F.col("vec_id") + 10**6).alias("vec_id"), "vector")
+    again = LshIndex.build(shifted, path=path, num_planes=12, dim=64)
+    got = again.topk(probe, max_probe_hamming=2, limit=5).collect()
+    assert got and min(r["vec_id"] for r in got) >= 10**6

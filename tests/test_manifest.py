@@ -328,3 +328,284 @@ def test_read_live_table_schema_evolution(spark, tmp_path):
 
     with pytest.raises(Exception, match="column|COLUMN"):
         read_live_table(spark, root, allow_schema_evolution=False).collect()
+
+
+# -- live-scan memo (read_live_table) ----------------------------------------
+
+
+def _keys(df):
+    return {r["doc_key"]: r["content"] for r in df.collect()}
+
+
+def test_store_reads_see_every_write_on_one_instance(spark, tmp_path):
+    """The live-scan memo is keyed on the committed live set, so a read
+    after any write through the same handle returns the post-write
+    state — for every write kind the store offers."""
+    store = DocumentStore(spark, str(tmp_path / "s"))
+    store.upsert(docs(spark, [("k1", "v1"), ("k2", "v1"), ("k3", "v1")], index="a"))
+    store.upsert(docs(spark, [("n1", "v1")], index="b"))
+    assert _keys(store.read("a")) == {"k1": "v1", "k2": "v1", "k3": "v1"}
+
+    store.upsert(docs(spark, [("k1", "v2")], index="a"))
+    assert _keys(store.read("a")) == {"k1": "v2", "k2": "v1", "k3": "v1"}
+
+    store.delete("a", ["k2"])
+    assert _keys(store.read("a")) == {"k1": "v2", "k3": "v1"}
+
+    store.delete_keys_df("a", spark.createDataFrame([("k3",)], "doc_key string"))
+    assert _keys(store.read("a")) == {"k1": "v2"}
+
+    store.compact("a")
+    assert _keys(store.read("a")) == {"k1": "v2"}
+
+    store.overwrite_index("a", docs(spark, [("k9", "v9")], index="a"))
+    assert _keys(store.read("a")) == {"k9": "v9"}
+
+    store.clear("a")  # metadata-only: same live set, new resets
+    assert _keys(store.read("a")) == {}
+    assert _keys(store.read("b")) == {"n1": "v1"}
+
+    store.upsert(docs(spark, [("k5", "v5")], index="a"))
+    store.vacuum(min_age_s=0.0)
+    assert len(store.log.current().live) == 1
+    assert _keys(store.read("a")) == {"k5": "v5"}
+    assert _keys(store.read("b")) == {"n1": "v1"}
+
+
+def test_second_store_handle_sees_commits_of_the_first(spark, tmp_path):
+    path = str(tmp_path / "s")
+    w1 = DocumentStore(spark, path)
+    w2 = DocumentStore(spark, path)
+    w1.upsert(docs(spark, [("k1", "v1")], index="a"))
+    assert _keys(w2.read("a")) == {"k1": "v1"}
+    w1.upsert(docs(spark, [("k1", "v2"), ("k2", "v1")], index="a"))
+    assert _keys(w2.read("a")) == {"k1": "v2", "k2": "v1"}
+    w1.delete("a", ["k1"])
+    assert _keys(w2.read("a")) == {"k2": "v1"}
+
+
+def test_read_at_keeps_its_snapshot_across_memoized_reads(spark, tmp_path):
+    store = DocumentStore(spark, str(tmp_path / "s"))
+    store.upsert(docs(spark, [("k1", "v1")], index="a"))
+    store.upsert(docs(spark, [("k1", "v2"), ("k2", "v2")], index="a"))
+    g1, g2 = [r["batch_id"] for r in store.generations("a").collect()]
+    assert _keys(store.read("a")) == {"k1": "v2", "k2": "v2"}
+    assert _keys(store.read_at(g1, "a")) == {"k1": "v1"}
+    store.upsert(docs(spark, [("k3", "v3")], index="a"))
+    assert _keys(store.read_at(g1, "a")) == {"k1": "v1"}
+    assert _keys(store.read_at(g2, "a")) == {"k1": "v2", "k2": "v2"}
+    assert _keys(store.read("a")) == {"k1": "v2", "k2": "v2", "k3": "v3"}
+
+
+def test_store_reads_new_rows_after_path_is_recreated(spark, tmp_path):
+    """Deleting the table directory and writing it again restarts the
+    manifest versions at 1; the memo is keyed on the (unique) live
+    generation names, so it can never serve the deleted scan."""
+    import shutil
+
+    path = str(tmp_path / "s")
+    store = DocumentStore(spark, path)
+    store.upsert(docs(spark, [("old", "v1")], index="a"))
+    assert _keys(store.read("a")) == {"old": "v1"}
+    v_before = store.log.current().version
+    shutil.rmtree(path)
+    store.upsert(docs(spark, [("new", "v2")], index="a"))
+    assert store.log.current().version == v_before
+    assert _keys(store.read("a")) == {"new": "v2"}
+    assert _keys(DocumentStore(spark, path).read("a")) == {"new": "v2"}
+
+
+def test_read_live_table_reuses_scan_until_live_set_changes(spark, tmp_path):
+    from wagtail_vector_index_spark.sources.manifest import read_live_table
+
+    root = str(tmp_path / "tbl")
+    log = ManifestLog(root)
+    g1 = log.new_generation()
+    spark.createDataFrame([(1,)], "id long").write.parquet(log.gen_path(g1))
+    log.commit(lambda cur: ([g1], {}))
+    first = read_live_table(spark, root)
+    assert read_live_table(spark, root) is first
+    assert read_live_table(spark, root, manifest=log.current()) is first
+    # a commit that keeps the live set (a reset only) keeps the scan
+    log.commit(lambda cur: (list(cur.live), {"x": [1]}))
+    assert read_live_table(spark, root) is first
+    # the strict and the evolving union are separate entries
+    strict = read_live_table(spark, root, allow_schema_evolution=False)
+    assert strict is not first
+    g2 = log.new_generation()
+    spark.createDataFrame([(2,)], "id long").write.parquet(log.gen_path(g2))
+    log.commit(lambda cur: (list(cur.live) + [g2], {}))
+    second = read_live_table(spark, root)
+    assert second is not first
+    assert {r["id"] for r in second.collect()} == {1, 2}
+    assert read_live_table(spark, root) is second
+
+
+def test_read_live_table_memo_is_bounded(spark, tmp_path, monkeypatch):
+    from wagtail_vector_index_spark.sources import manifest
+
+    monkeypatch.setattr(manifest, "LIVE_SCAN_MEMO_MAX", 3)
+    roots = []
+    for i in range(5):
+        root = str(tmp_path / f"t{i}")
+        log = ManifestLog(root)
+        g = log.new_generation()
+        spark.createDataFrame([(i,)], "id long").write.parquet(log.gen_path(g))
+        log.commit(lambda cur, g=g: ([g], {}))
+        roots.append(root)
+    scans = [manifest.read_live_table(spark, r) for r in roots]
+    assert len(manifest._LIVE_SCANS) <= 3
+    # the most recent entries are reused, the oldest was dropped
+    assert manifest.read_live_table(spark, roots[-1]) is scans[-1]
+    again = manifest.read_live_table(spark, roots[0])
+    assert again is not scans[0]
+    assert [r["id"] for r in again.collect()] == [0]
+    assert len(manifest._LIVE_SCANS) <= 3
+
+
+def _jobs_for(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_read_jobs_do_not_grow_with_generations(spark, tmp_path):
+    """Listing a generation and inferring its parquet schema starts
+    Spark jobs. Once a committed state has been read, a repeat read
+    pays none of them, so it costs no more jobs on a three-generation
+    store than on a one-generation store."""
+    one = DocumentStore(spark, str(tmp_path / "one"))
+    one.upsert(docs(spark, [("k1", "v1"), ("k2", "v1")], index="a"))
+    three = DocumentStore(spark, str(tmp_path / "three"))
+    three.upsert(docs(spark, [("k1", "v1"), ("k2", "v1")], index="a"))
+    three.delete("a", ["k2"])
+    three.upsert(docs(spark, [("k3", "v1")], index="a"))
+    assert len(three.log.current().live) == 3
+    for s in (one, three):
+        s.read("a").collect()  # first read of this state lists it
+    tag = f"wvi-test-{os.getpid()}-{time.time_ns()}"
+    n_one = _jobs_for(spark, tag + "-1", lambda: one.read("a").collect())
+    n_three = _jobs_for(spark, tag + "-3", lambda: three.read("a").collect())
+    assert n_one >= 1
+    assert n_three <= n_one
+
+
+def test_reads_racing_a_writer_see_before_or_after_state(spark, tmp_path):
+    """Reader threads (as ``aquery`` runs retrieval in a thread) racing a
+    committing writer always read one committed state — a prefix of the
+    writer's upserts — and never fail on a half-published live set."""
+    store = DocumentStore(spark, str(tmp_path / "s"))
+    store.upsert(docs(spark, [("k0", "v")], index="a"))
+    n_writes = 4
+    states = [{f"k{j}" for j in range(i + 1)} for i in range(n_writes + 1)]
+    done = threading.Event()
+    seen: list[set] = []
+    errors: list[BaseException] = []
+
+    def reader():
+        handle = DocumentStore(spark, store.path)
+        try:
+            while not done.is_set():
+                seen.append(set(_keys(handle.read("a"))))
+        except BaseException as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    readers = [threading.Thread(target=reader) for _ in range(2)]
+    for t in readers:
+        t.start()
+    try:
+        for i in range(1, n_writes + 1):
+            store.upsert(docs(spark, [(f"k{i}", "v")], index="a"))
+    finally:
+        done.set()
+        for t in readers:
+            t.join(timeout=120)
+    assert not any(t.is_alive() for t in readers)
+    assert not errors, errors
+    assert seen and all(s in states for s in seen)
+    assert set(_keys(store.read("a"))) == states[-1]
+
+
+def test_read_live_table_memo_under_thread_stress(spark, tmp_path, monkeypatch):
+    """More threads than cores hammer the memo with a short switch
+    interval. Without evictions every thread must get the one stored
+    scan per table (a lost check-then-insert would hand out a second
+    object); with evictions the memo must still never exceed its bound."""
+    import sys
+
+    from wagtail_vector_index_spark.sources import manifest
+
+    roots = []
+    for i in range(4):
+        root = str(tmp_path / f"t{i}")
+        log = ManifestLog(root)
+        g = log.new_generation()
+        spark.createDataFrame([(i,)], "id long").write.parquet(log.gen_path(g))
+        log.commit(lambda cur, g=g: ([g], {}))
+        roots.append(root)
+
+    def hammer(bound, n_roots):
+        monkeypatch.setattr(manifest, "LIVE_SCAN_MEMO_MAX", bound)
+        manifest._LIVE_SCANS.clear()
+        got: dict[int, list] = {i: [] for i in range(n_roots)}
+        errors: list[BaseException] = []
+        sizes: list[int] = []
+
+        def work(seed):
+            try:
+                for j in range(12):
+                    i = (seed + j) % n_roots
+                    got[i].append(manifest.read_live_table(spark, roots[i]))
+                    with manifest._LIVE_SCANS_LOCK:
+                        sizes.append(len(manifest._LIVE_SCANS))
+            except BaseException as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=work, args=(k,)) for k in range(12)]
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=240)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert max(sizes) <= bound
+        return got
+
+    got = hammer(bound=4, n_roots=4)
+    for i, frames in got.items():
+        assert len(frames) == 36 and all(f is frames[0] for f in frames)
+    hammer(bound=2, n_roots=4)
+    assert len(manifest._LIVE_SCANS) <= 2
+
+
+def test_read_live_table_after_token_table_is_recreated(spark, tmp_path):
+    """Token generations are named after their exactly-once token, so a
+    table deleted and fed the same stream again (same checkpoint, same
+    batch ids) commits the very same live names. The memo must still
+    serve the new incarnation's files, not the deleted listing."""
+    import hashlib
+    import shutil
+
+    from wagtail_vector_index_spark.sources.manifest import read_live_table
+
+    root = str(tmp_path / "tok")
+    gen = f"gen-tok-{hashlib.sha256(b'/ckpt#0').hexdigest()[:24]}"
+    for ids in ([1, 2], [7]):
+        if os.path.exists(root):
+            shutil.rmtree(root)
+        log = ManifestLog(root)
+        spark.createDataFrame([(i,) for i in ids], "id long").write.parquet(
+            log.gen_path(gen)
+        )
+        log.commit(lambda cur: ([gen], {}))
+        assert sorted(r["id"] for r in read_live_table(spark, root).collect()) == ids

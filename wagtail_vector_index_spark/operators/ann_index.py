@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
-from functools import reduce
 from itertools import combinations
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,30 +44,8 @@ from wagtail_vector_index_spark.sources.manifest import (
     Manifest,
     ManifestLog,
     has_data_files,
+    read_live_table,
 )
-
-# One DataFrame per (vectors path, manifest version), reused across
-# queries: each fresh spark.read.parquet() rebuilds the InMemoryFileIndex,
-# and with thousands of bucket partitions that listing job costs more than
-# the pruned scan itself. A real deployment gets this for free from the
-# metastore (the catalog caches the partition listing); this dict is the
-# local stand-in. Keying on the manifest version makes invalidation
-# automatic: any committed write bumps the version and the stale entry is
-# simply never hit again.
-_VECTORS_DF_CACHE: dict[tuple[str, int], DataFrame] = {}
-
-
-def _read_live(spark: SparkSession, log: ManifestLog) -> DataFrame:
-    """The live vectors table: union of the committed generation scans
-    (sources/manifest.py protocol — partition pruning applies per scan)."""
-    m = log.current()
-    if m is None or not m.live:
-        raise FileNotFoundError(f"no committed index at {log.root}")
-    key = (log.root, m.version)
-    if key not in _VECTORS_DF_CACHE:
-        frames = [spark.read.parquet(p) for p in log.live_paths(m)]
-        _VECTORS_DF_CACHE[key] = reduce(DataFrame.unionByName, frames)
-    return _VECTORS_DF_CACHE[key]
 
 
 def _commit_append(
@@ -223,18 +200,20 @@ class IvfIndex:
         self.vec_col = vec_col
         # Codebooks are immutable after build() (append/delete/compact
         # touch only the vectors log), so the k-row driver-side collect
-        # is memoized per instance, KEYED ON THE MANIFEST VERSION (r5):
-        # build() always commits the vectors log after writing the
-        # codebook, so a same-path rebuild bumps the version and the
-        # memo self-invalidates — a long-lived served instance can never
+        # is memoized per instance, KEYED ON THE LIVE GENERATION SET:
+        # build() always commits a fresh, uniquely named vectors
+        # generation after writing the codebook, so a same-path rebuild
+        # (even after the directory was deleted and the manifest
+        # version restarted) changes the stamp and the memo
+        # self-invalidates — a long-lived served instance can never
         # answer from stale centroids. The stamp check is one local
-        # manifest-JSON read per query; appends bump the version too,
+        # manifest-JSON read per query; appends change the live set too,
         # costing one redundant k-row re-collect, which is noise.
-        self._codebook_rows_cache: tuple[int, list] | None = None
+        self._codebook_rows_cache: tuple[tuple[str, ...], list] | None = None
 
-    def _manifest_stamp(self) -> int:
+    def _manifest_stamp(self) -> tuple[str, ...]:
         cur = self.vectors_log.current()
-        return -1 if cur is None else cur.version
+        return () if cur is None else cur.live
 
     def _codebook_rows(self) -> list:
         stamp = self._manifest_stamp()
@@ -250,10 +229,12 @@ class IvfIndex:
 
     def refresh(self) -> None:
         """Drop memoized codebooks so the next query re-reads them from
-        storage. Since r5 the memos are keyed on the manifest version
-        and self-invalidate on any committed write (including a
-        same-path rebuild), so this is only needed for out-of-band
-        edits that bypass the manifest protocol entirely."""
+        storage. The memos are keyed on the live generation set and
+        self-invalidate on any committed write (including a same-path
+        rebuild), so this is only needed for out-of-band edits that
+        bypass the manifest protocol entirely — which the shared
+        live-scan memo (``sources.manifest.read_live_table``) does not
+        see either."""
         self._codebook_rows_cache = None
         if hasattr(self, "_pq_cb_cache"):
             self._pq_cb_cache = None
@@ -271,7 +252,9 @@ class IvfIndex:
         return ManifestLog(self.vectors_path)
 
     def _vectors(self) -> DataFrame:
-        return _read_live(self.spark, self.vectors_log)
+        return read_live_table(
+            self.spark, self.vectors_path, allow_schema_evolution=False
+        )
 
     def live_partition_dirs(self) -> list[str]:
         """Absolute paths of the live ``<key>=<value>`` partition dirs
@@ -723,12 +706,12 @@ class IvfPqIndex(IvfIndex):
                 out.append((mi, j, nv[mi * sub : (mi + 1) * sub]))
         return spark.createDataFrame(out, "m int, j int, cv array<double>")
 
-    _pq_cb_cache: tuple[int, list[list[list[float]]]] | None = None
+    _pq_cb_cache: tuple[tuple[str, ...], list[list[list[float]]]] | None = None
 
     def _pq_codebook(self) -> list[list[list[float]]]:
-        # manifest-version stamp, same invalidation contract as
-        # IvfIndex._codebook_rows: a same-path rebuild bumps the vectors
-        # log and the memo self-invalidates
+        # live-set stamp, same invalidation contract as
+        # IvfIndex._codebook_rows: a same-path rebuild commits a new
+        # vectors generation and the memo self-invalidates
         stamp = self._manifest_stamp()
         if self._pq_cb_cache is not None and self._pq_cb_cache[0] == stamp:
             return self._pq_cb_cache[1]
@@ -904,7 +887,9 @@ class LshIndex:
         return ManifestLog(self.vectors_path)
 
     def _vectors(self) -> DataFrame:
-        return _read_live(self.spark, self.vectors_log)
+        return read_live_table(
+            self.spark, self.vectors_path, allow_schema_evolution=False
+        )
 
     def live_partition_dirs(self) -> list[str]:
         """Absolute paths of the live ``<key>=<value>`` partition dirs

@@ -43,9 +43,12 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass
+from functools import reduce
 
 MANIFEST_DIR = "_manifests"
 _MANIFEST_RE = re.compile(r"^manifest-(\d{12})\.json$")
@@ -307,11 +310,49 @@ class ManifestLog:
         return deleted
 
 
-def read_live_table(spark, root: str, *, allow_schema_evolution: bool = True):
+# Bound of the live-scan memo below. Entries are DataFrames (a plan plus
+# the file listing Spark keeps for it), not data; a process serves a
+# handful of tables, and each commit that changes a live set leaves one
+# superseded entry behind until the LRU drops it.
+LIVE_SCAN_MEMO_MAX = 32
+_LIVE_SCANS: OrderedDict[tuple, object] = OrderedDict()
+_LIVE_SCANS_LOCK = threading.Lock()
+
+
+def _dir_stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None  # gone: the scan below fails as it would have anyway
+    return st.st_ino, st.st_mtime_ns
+
+
+def read_live_table(
+    spark,
+    root: str,
+    *,
+    manifest: Manifest | None = None,
+    allow_schema_evolution: bool = True,
+):
     """The live rows of a manifest-committed table at ``root``: union of
     the committed generation scans (partition pruning applies per
-    scan). Raises FileNotFoundError when nothing is committed —
+    scan). ``manifest`` pins the state to read (default: the newest
+    committed one). Raises FileNotFoundError when nothing is committed —
     a data directory without a manifest reads as never-written.
+
+    The unioned DataFrame is memoized per (session, root, live set,
+    ``allow_schema_evolution``), so each generation is listed and its
+    schema inferred once per committed state instead of on every read.
+    The key is exact because committed generation directories are
+    immutable and uniquely named: the listing stays valid for as long
+    as the live set that produced it, and any commit that changes the
+    live set misses. Token generations (``gen-tok-*``) are named after
+    their exactly-once token rather than their creation — a table
+    deleted and fed the same stream again commits the same names — so
+    their directory inode and mtime join the key. Files edited behind
+    the manifest's back are not seen. The memo holds plans, never rows,
+    and keeps at most ``LIVE_SCAN_MEMO_MAX`` entries (least recently
+    used dropped first).
 
     ``allow_schema_evolution`` (default on — the expected lakehouse
     contract): generations written before a column existed read that
@@ -319,16 +360,30 @@ def read_live_table(spark, root: str, *, allow_schema_evolution: bool = True):
     with a new column never requires rewriting history (compaction
     materializes the unified schema whenever it next runs). Pass False
     to make any schema drift a hard error instead."""
-    from functools import reduce
-
     log = ManifestLog(root)
-    cur = log.current()
+    cur = manifest if manifest is not None else log.current()
     if cur is None or not cur.live:
         raise FileNotFoundError(f"no committed table at {root}")
+    tok_stamps = tuple(
+        _dir_stamp(log.gen_path(g)) for g in cur.live if _TOK_GEN_RE.match(g)
+    )
+    key = (spark, root, cur.live, tok_stamps, allow_schema_evolution)
+    with _LIVE_SCANS_LOCK:
+        if key in _LIVE_SCANS:
+            _LIVE_SCANS.move_to_end(key)
+            return _LIVE_SCANS[key]
+    # list and union outside the lock: a racing first read of the same
+    # state builds an equal plan, and the first one stored wins
     frames = [spark.read.parquet(p) for p in log.live_paths(cur)]
-    return reduce(
+    df = reduce(
         lambda a, b: a.unionByName(
             b, allowMissingColumns=allow_schema_evolution
         ),
         frames,
     )
+    with _LIVE_SCANS_LOCK:
+        df = _LIVE_SCANS.setdefault(key, df)
+        _LIVE_SCANS.move_to_end(key)
+        while len(_LIVE_SCANS) > LIVE_SCAN_MEMO_MAX:
+            _LIVE_SCANS.popitem(last=False)
+    return df

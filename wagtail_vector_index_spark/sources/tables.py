@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from wagtail_vector_index_spark.sources.manifest import (
     Manifest,
     ManifestLog,
     has_data_files,
+    read_live_table,
 )
 
 DOCUMENT_COLUMNS = ("object_keys", "content", "vector", "metadata", "index_name")
@@ -74,12 +74,15 @@ class DocumentStore:
         return m is not None and bool(m.live)
 
     def _raw(self, manifest: Manifest) -> DataFrame:
-        """Union of the live generation scans. Each generation is its own
-        partitioned parquet root, so Catalyst prunes (index_name, dim)
-        partitions per scan; compact/vacuum keep the generation count
-        small, so the union stays shallow."""
-        frames = [self.spark.read.parquet(p) for p in self.log.live_paths(manifest)]
-        return reduce(lambda a, b: a.unionByName(b), frames)
+        """Union of the live generation scans of ``manifest``, listed
+        once per committed state and reused by every read until a
+        commit changes the live set (see ``read_live_table``). Each
+        generation is its own partitioned parquet root, so Catalyst
+        prunes (index_name, dim) partitions per scan; compact/vacuum
+        keep the generation count small, so the union stays shallow."""
+        return read_live_table(
+            self.spark, self.path, manifest=manifest, allow_schema_evolution=False
+        )
 
     @staticmethod
     def _reset_filter(df: DataFrame, manifest: Manifest, batch_id: int | None):
