@@ -300,15 +300,16 @@ def test_append_dedup_token_exactly_once(spark, index_df, centroids_df, tmp_path
     # crash AFTER the generation dir write but BEFORE the commit: the
     # directory exists, the manifest doesn't list it — a replay must
     # overwrite and commit exactly one copy
-    from wagtail_vector_index_spark.operators.ann_index import _append_gen
-
     tok2 = "/ckpt/ann#8"
-    gen = _append_gen(idx.vectors_log, tok2)
     batch2 = spark.createDataFrame(
         [(990003, [0.25] * 64)], "vec_id long, vector array<double>"
     )
-    # simulate the pre-crash partial write (data on disk, never committed)
-    batch2.write.mode("overwrite").parquet(idx.vectors_log.gen_path(gen))
+    # simulate the pre-crash write (data published under the token's
+    # generation name, never committed)
+    gen = idx.vectors_log.write_generation(
+        lambda p: batch2.write.mode("overwrite").parquet(p), token=tok2
+    )
+    assert gen is not None and os.path.isdir(idx.vectors_log.gen_path(gen))
     assert idx._vectors().count() == n1  # invisible until committed
     idx.append(batch2, dedup_token=tok2)  # the replay
     assert idx._vectors().count() == n1 + 1
@@ -473,12 +474,7 @@ def test_replay_race_never_rewrites_live_generation_in_place(
     loser's copy."""
     import os
 
-    from wagtail_vector_index_spark.operators.ann_index import (
-        _append_gen,
-        _commit_append,
-        _gen_write_path,
-        _publish_gen_dir,
-    )
+    from wagtail_vector_index_spark.operators.knn import ivf_assign
 
     path = str(tmp_path_factory.mktemp("ivf_race"))
     idx = IvfIndex.build(index_df, path=path, centroids_df=centroids_df)
@@ -487,45 +483,49 @@ def test_replay_race_never_rewrites_live_generation_in_place(
     )
     token = "batch-42"
     log = idx.vectors_log
-    # BOTH writers pass the pre-write check before either commits
-    gen_a = _append_gen(log, token)
-    gen_b = _append_gen(log, token)
-    assert gen_a == gen_b and gen_a is not None
+    seen = {}
 
-    # writer A wins: writes, publishes, commits
-    idx.append(batch, dedup_token=token)
-    live_dir = log.gen_path(gen_a)
-    before = {
-        f: os.stat(os.path.join(live_dir, f)).st_mtime_ns
-        for f in os.listdir(live_dir)
-        if not f.startswith(".")
-    }
-    n_before = idx._vectors().count()
+    def write_b(staged: str) -> None:
+        # writer B (the straggler replay) has passed the pre-write token
+        # check; writer A's whole append — write, publish, commit — runs
+        # before B writes its copy
+        idx.append(batch, dedup_token=token)
+        (gen_a,) = [g for g in log.current().live if g.startswith("gen-tok-")]
+        live_dir = log.gen_path(gen_a)
+        seen.update(
+            gen_a=gen_a,
+            live_dir=live_dir,
+            staged=staged,
+            n_before=idx._vectors().count(),
+            before={
+                f: os.stat(os.path.join(live_dir, f)).st_mtime_ns
+                for f in os.listdir(live_dir)
+                if not f.startswith(".")
+            },
+        )
+        codebook = spark.read.parquet(idx.codebook_path)
+        ivf_assign(
+            batch, codebook, index_id="vec_id", index_vec="vector"
+        ).repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
+            staged
+        )
 
-    # writer B (the straggler replay) now performs its write + publish
-    # + commit using the stale gen name it already holds
-    staged = _gen_write_path(log, gen_b, token)
-    codebook = spark.read.parquet(idx.codebook_path)
-    from wagtail_vector_index_spark.operators.knn import ivf_assign
-
-    ivf_assign(
-        batch, codebook, index_id="vec_id", index_vec="vector"
-    ).repartition("cid").write.mode("overwrite").partitionBy("cid").parquet(
-        staged
-    )
-    _publish_gen_dir(log, staged, gen_b)
-    _commit_append(log, gen_b, dedup_token=token)
+    # B now performs its publish + commit with the gen name it holds
+    gen_b = log.write_generation(write_b, token=token)
+    assert gen_b == seen["gen_a"] and gen_b is not None
+    log.commit_append(gen_b, token=token)
 
     # the live directory was never touched, the staged copy is gone,
     # and the table still reads exactly once
+    gen_a, live_dir, staged = seen["gen_a"], seen["live_dir"], seen["staged"]
     after = {
         f: os.stat(os.path.join(live_dir, f)).st_mtime_ns
         for f in os.listdir(live_dir)
         if not f.startswith(".")
     }
-    assert after == before
+    assert after == seen["before"]
     assert not os.path.exists(staged)
-    assert idx._vectors().count() == n_before
+    assert idx._vectors().count() == seen["n_before"]
     assert log.current().live.count(gen_a) == 1
 
 

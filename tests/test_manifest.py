@@ -204,6 +204,157 @@ def test_gc_reader_grace_protects_superseded_generations(tmp_path):
     assert log.gen_path(g_merged) in deleted
 
 
+# -- the write path: write_generation / commit_append / commit_rewrite -------
+
+
+def _drop_part(path):
+    """A stand-in for a Spark write: has_data_files checks names only."""
+    os.makedirs(path, exist_ok=True)
+    open(os.path.join(path, "part-0.parquet"), "w").close()
+
+
+def _touch_success(path):
+    """A Spark write of an empty frame: a directory with only _SUCCESS."""
+    os.makedirs(path, exist_ok=True)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+
+
+def test_write_generation_publishes_fresh_and_token_names(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    gen = log.write_generation(_drop_part)
+    assert gen.startswith("gen-") and os.path.isdir(log.gen_path(gen))
+    tok_gen = log.write_generation(_drop_part, token="t-1")
+    assert tok_gen.startswith("gen-tok-")
+    assert os.path.isfile(os.path.join(log.gen_path(tok_gen), "part-0.parquet"))
+    # the staging directory was renamed into place, not left behind
+    assert not [n for n in os.listdir(log.root) if ".stage-" in n]
+    assert log.current() is None  # nothing visible until a commit
+
+
+@pytest.mark.parametrize("token", [None, "t-empty"])
+def test_write_generation_empty_write_leaves_nothing(tmp_path, token):
+    log = ManifestLog(str(tmp_path))
+    assert log.write_generation(_touch_success, token=token) is None
+    assert os.listdir(log.root) == []
+
+
+def test_write_generation_skips_applied_token(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    gen = log.write_generation(_drop_part, token="t-1")
+    log.commit_append(gen, token="t-1")
+
+    def never(path):
+        raise AssertionError("write called for an applied token")
+
+    assert log.write_generation(never, token="t-1") is None
+    # also when the token fell out of the window but its generation is
+    # live: a replay must never overwrite a serving directory in place
+    log.commit(lambda cur: (list(cur.live), {}, []))
+    assert log.current().tokens == ()
+    assert log.write_generation(never, token="t-1") is None
+
+
+def test_write_generation_replaces_crash_leftover(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    # crashed writer: published under the token name, never committed
+    gen = log.write_generation(_drop_part, token="t-1")
+    stale = os.path.join(log.gen_path(gen), "part-stale.parquet")
+    open(stale, "w").close()
+
+    def replay(path):
+        os.makedirs(path)
+        open(os.path.join(path, "part-1.parquet"), "w").close()
+
+    assert log.write_generation(replay, token="t-1") == gen
+    assert os.listdir(log.gen_path(gen)) == ["part-1.parquet"]
+    log.commit_append(gen, token="t-1")
+    assert log.current().live == (gen,) and log.current().tokens == ("t-1",)
+
+
+def test_commit_append_tokens_and_resets(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    assert log.commit_append(None) is None and log.current() is None
+    g1 = log.write_generation(_drop_part, token="t-1")
+    log.commit_append(g1, token="t-1")
+    log.commit_append(g1, token="t-1")  # replayed commit: no-op bump
+    m = log.current()
+    assert m.version == 2 and m.live == (g1,) and m.tokens == ("t-1",)
+    g2 = log.write_generation(_drop_part)
+    log.commit_append(g2, reset=("idx", 5))
+    # reset only (a clear): live set and tokens are kept
+    m = log.commit_append(None, reset=("idx", 9))
+    assert m.live == (g1, g2)
+    assert m.resets == {"idx": [5, 9]} and m.tokens == ("t-1",)
+
+
+def test_commit_rewrite_carries_over_later_commits(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    g1 = log.write_generation(_drop_part)
+    log.commit_append(g1, reset=("idx", 1))
+    base = log.current()
+    # committed by other writers after base was read
+    g2 = log.write_generation(_drop_part)
+    log.commit_append(g2, reset=("idx", 2))
+    log.commit_append(None, reset=("other", 3))
+    merged = log.write_generation(_drop_part)
+    m = log.commit_rewrite(merged, base=base)
+    assert m.live == (merged, g2)
+    # base's reset is consumed (the rewrite applied it); later ones stay
+    assert m.resets == {"idx": [2], "other": [3]}
+    # an empty rewrite keeps only what was carried over
+    base = log.current()
+    g3 = log.write_generation(_drop_part)
+    log.commit_append(g3)
+    assert log.commit_rewrite(None, base=base).live == (g3,)
+
+
+def test_commit_rewrite_replaced_keeps_unmerged_generations(tmp_path):
+    log = ManifestLog(str(tmp_path))
+    small = [log.write_generation(_drop_part) for _ in range(3)]
+    for g in small:
+        log.commit_append(g, token=f"t-{g}")
+    base = log.current()
+    late = log.write_generation(_drop_part)
+    log.commit_append(late)
+    merged = log.write_generation(_drop_part)
+    m = log.commit_rewrite(merged, base=base, replaced=small[:2])
+    assert m.live == (merged, small[2], late)
+    assert m.tokens == tuple(f"t-{g}" for g in small)  # token memory kept
+
+
+def test_only_the_manifest_module_names_and_commits_generations():
+    """One write path: inside the package only sources/manifest.py
+    allocates generation names or commits a manifest, and no module
+    imports a private name from operators.ann_index."""
+    import ast
+
+    import wagtail_vector_index_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    owner = os.path.join(root, "sources", "manifest.py")
+    offenders = []
+    for dp, _dirs, fs in os.walk(root):
+        for f in fs:
+            if not f.endswith(".py"):
+                continue
+            p = os.path.join(dp, f)
+            for node in ast.walk(ast.parse(open(p).read())):
+                if (
+                    p != owner
+                    and isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("new_generation", "commit")
+                ):
+                    offenders.append(f"{p}:{node.lineno} {node.func.attr}")
+                if (
+                    isinstance(node, ast.ImportFrom)
+                    and (node.module or "").endswith("ann_index")
+                    and any(a.name.startswith("_") for a in node.names)
+                ):
+                    offenders.append(f"{p}:{node.lineno} private import")
+    assert offenders == []
+
+
 # -- DocumentStore on the manifest log --------------------------------------
 
 

@@ -58,12 +58,6 @@ def _old_neardup_corpus_stream(doc_stream, *, path, checkpoint_dir,
     body: the standing corpus is re-read as TEXT and re-fingerprinted
     (minhash_signatures over the whole live table) on EVERY
     micro-batch. Kept here as the staging counterpoint only."""
-    from wagtail_vector_index_spark.operators.ann_index import (
-        _append_gen,
-        _commit_append,
-        _gen_write_path,
-        _publish_gen_dir,
-    )
     from wagtail_vector_index_spark.operators.dedup import (
         incremental_neardup_filter,
         keep_representatives_exact,
@@ -81,31 +75,29 @@ def _old_neardup_corpus_stream(doc_stream, *, path, checkpoint_dir,
         if batch_df.isEmpty():
             return
         token = f"{checkpoint_dir}#{batch_id}"
-        gen = _append_gen(log, token)
-        if gen is None:
-            return
         spark = batch_df.sparkSession
-        pairs = minhash_lsh_pairs(
-            batch_df, threshold=threshold, **minhash_kwargs
-        )
-        survivors = keep_representatives_exact(batch_df, pairs)
-        cur = log.current()
-        if cur is not None and cur.live:
-            corpus = read_live_table(spark, path)
-            corpus_sigs = minhash_signatures(
-                corpus,
-                n=minhash_kwargs.get("n", 3),
-                num_hashes=minhash_kwargs.get("num_hashes", 16),
-                cache=False,
-            ).localCheckpoint(eager=False)
-            survivors = incremental_neardup_filter(
-                survivors, None, threshold=threshold,
-                corpus_signatures=corpus_sigs, **minhash_kwargs,
+
+        def write(written):
+            pairs = minhash_lsh_pairs(
+                batch_df, threshold=threshold, **minhash_kwargs
             )
-        written = _gen_write_path(log, gen, token)
-        survivors.write.mode("overwrite").parquet(written)
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=token)
+            survivors = keep_representatives_exact(batch_df, pairs)
+            cur = log.current()
+            if cur is not None and cur.live:
+                corpus = read_live_table(spark, path)
+                corpus_sigs = minhash_signatures(
+                    corpus,
+                    n=minhash_kwargs.get("n", 3),
+                    num_hashes=minhash_kwargs.get("num_hashes", 16),
+                    cache=False,
+                ).localCheckpoint(eager=False)
+                survivors = incremental_neardup_filter(
+                    survivors, None, threshold=threshold,
+                    corpus_signatures=corpus_sigs, **minhash_kwargs,
+                )
+            survivors.write.mode("overwrite").parquet(written)
+
+        log.commit_append(log.write_generation(write, token=token), token=token)
 
     return (
         doc_stream.writeStream.foreachBatch(_process)

@@ -43,134 +43,8 @@ from wagtail_vector_index_spark.operators.knn import (
 from wagtail_vector_index_spark.sources.manifest import (
     Manifest,
     ManifestLog,
-    has_data_files,
     read_live_table,
 )
-
-
-def _commit_append(
-    log: ManifestLog, gen: str, *, dedup_token: str | None = None
-) -> Manifest | None:
-    import shutil
-
-    if not has_data_files(log.gen_path(gen)):
-        shutil.rmtree(log.gen_path(gen), ignore_errors=True)
-        return None
-
-    def up(cur):
-        live = list(cur.live) if cur else []
-        tokens = list(cur.tokens) if cur else []
-        if dedup_token is not None and dedup_token in tokens:
-            # a racing replay committed first — keep the state unchanged
-            # (the commit becomes a no-op version bump)
-            return live, {}, tokens
-        # idempotent for deterministic (dedup-token) generation names:
-        # a replayed commit must not list the same generation twice
-        if gen not in live:
-            live.append(gen)
-        if dedup_token is not None:
-            tokens.append(dedup_token)
-        return live, {}, tokens
-
-    return log.commit(up)
-
-
-def _append_gen(log: ManifestLog, dedup_token: str | None) -> str | None:
-    """Generation name for an append. With ``dedup_token`` the token is
-    checked against the manifest's processed-token window (exactly-once
-    for stream replays): already applied — return None, skip. The token
-    memory lives IN the manifest, so it survives compaction/GC of the
-    generation that carried the batch (a replay after compact must stay
-    a no-op). The generation name is a deterministic function of the
-    token so a crash between data write and commit leaves a directory
-    the replay safely overwrites."""
-    if dedup_token is None:
-        return log.new_generation()
-    import hashlib
-
-    cur = log.current()
-    gen = f"gen-tok-{hashlib.sha256(dedup_token.encode()).hexdigest()[:24]}"
-    if cur is not None and (dedup_token in cur.tokens or gen in cur.live):
-        # Already applied. The gen-in-live check matters when the token
-        # is absent from the window (pre-tokens-field manifests, or a
-        # MAX_TOKENS eviction): without it a replay would OVERWRITE a
-        # live, serving generation directory in place.
-        return None
-    return gen
-
-
-def _gen_write_path(log: ManifestLog, gen: str, dedup_token: str | None) -> str:
-    """Where an append batch should be WRITTEN. Token-deduped appends
-    use deterministic generation names, so a racing replay of the same
-    batch could target a directory that is already live and serving —
-    those write to a unique staging directory first and are swapped
-    into place by :func:`_publish_gen_dir`. Tokenless appends get fresh
-    generation names (no collision possible) and write directly."""
-    if dedup_token is None:
-        return log.gen_path(gen)
-    import uuid
-
-    return log.gen_path(f"{gen}.stage-{uuid.uuid4().hex[:12]}")
-
-
-def _publish_gen_dir(log: ManifestLog, written: str, gen: str) -> None:
-    """Atomically move a staged generation directory into its final
-    name (no-op when the batch wrote directly). Closes the r4 TOCTOU:
-    the pre-write token/liveness check in :func:`_append_gen` could
-    pass for BOTH of two racing replays, and the loser's
-    ``mode('overwrite')`` write would transiently delete files under a
-    directory the winner had just committed as live. With a staged
-    write the loser's rename simply fails (POSIX rename won't clobber
-    a non-empty directory) and its identical copy is discarded; the
-    live directory is never rewritten in place. A crash leftover — the
-    directory exists but was never committed — is replaced only after
-    re-checking the manifest immediately before the swap, which
-    narrows (not eliminates: this is a local-FS stand-in for an
-    object-store conditional put) the remaining window to
-    rmtree-vs-concurrent-commit of byte-identical data."""
-    import os
-    import shutil
-
-    final = log.gen_path(gen)
-    if written == final:
-        return
-    try:
-        os.rename(written, final)
-        return
-    except OSError:
-        pass
-    cur = log.current()
-    if cur is not None and gen in cur.live:
-        # a racing replay won and its (identical) data is serving
-        shutil.rmtree(written, ignore_errors=True)
-        return
-    # uncommitted leftover from a crashed writer: replace it
-    shutil.rmtree(final, ignore_errors=True)
-    try:
-        os.rename(written, final)
-    except OSError:
-        shutil.rmtree(written, ignore_errors=True)
-
-
-def _commit_rewrite(log: ManifestLog, gen: str, base: Manifest | None) -> Manifest:
-    """Publish ``gen`` as a rewrite of the state read at ``base``;
-    generations appended by concurrent writers since ``base`` are carried
-    over instead of silently dropped. An empty rewrite (all rows deleted
-    — Spark wrote no data files) publishes without the generation."""
-    import shutil
-
-    base_live = set(base.live) if base else set()
-    if not has_data_files(log.gen_path(gen)):
-        shutil.rmtree(log.gen_path(gen), ignore_errors=True)
-        gen = None
-
-    def up(cur):
-        cur_live = list(cur.live) if cur else []
-        return ([gen] if gen is not None else []) + [
-            g for g in cur_live if g not in base_live
-        ], {}
-
-    return log.commit(up)
 
 
 def _seq_dot(a: Sequence[float], b: Sequence[float]) -> float:
@@ -182,9 +56,20 @@ def _seq_dot(a: Sequence[float], b: Sequence[float]) -> float:
     return total
 
 
-class IvfIndex:
-    """IVF index persisted as ``{path}/vectors`` (partitioned by ``cid``)
-    plus ``{path}/codebook`` (k rows)."""
+def _trained_centroids(df: DataFrame, **kw) -> DataFrame:
+    """A k-means codebook (operators/kmeans.py) as ``(cid, cv)`` rows."""
+    from wagtail_vector_index_spark.operators.kmeans import train_codebook
+
+    centroids, _ = train_codebook(df, **kw)
+    return df.sparkSession.createDataFrame(centroids, "cid int, cv array<double>")
+
+
+class _VectorsTable:
+    """What the ANN tiers share: the ``{path}/vectors`` table, committed
+    through a manifest log and laid out on disk by the tier's
+    :meth:`_write_layout`. Appends publish one new generation each;
+    ``build``, ``delete_ids`` and ``compact`` publish rewrites, which
+    carry over generations appended meanwhile instead of dropping them."""
 
     def __init__(
         self,
@@ -198,18 +83,112 @@ class IvfIndex:
         self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
-        # Codebooks are immutable after build() (append/delete/compact
-        # touch only the vectors log), so the k-row driver-side collect
-        # is memoized per instance, KEYED ON THE LIVE GENERATION SET:
-        # build() always commits a fresh, uniquely named vectors
-        # generation after writing the codebook, so a same-path rebuild
-        # (even after the directory was deleted and the manifest
-        # version restarted) changes the stamp and the memo
-        # self-invalidates — a long-lived served instance can never
-        # answer from stale centroids. The stamp check is one local
-        # manifest-JSON read per query; appends change the live set too,
-        # costing one redundant k-row re-collect, which is noise.
-        self._codebook_rows_cache: tuple[tuple[str, ...], list] | None = None
+
+    @staticmethod
+    def _write_layout(df: DataFrame, path: str) -> None:
+        """Write ``df`` as one generation in the tier's on-disk layout."""
+        raise NotImplementedError
+
+    @property
+    def vectors_path(self) -> str:
+        return f"{self.path}/vectors"
+
+    @property
+    def vectors_log(self) -> ManifestLog:
+        return ManifestLog(self.vectors_path)
+
+    def _vectors(self, manifest: Manifest | None = None) -> DataFrame:
+        return read_live_table(
+            self.spark,
+            self.vectors_path,
+            manifest=manifest,
+            allow_schema_evolution=False,
+        )
+
+    def live_partition_dirs(self) -> list[str]:
+        """Absolute paths of the live ``<key>=<value>`` partition dirs
+        across the committed generations (test/inspection helper)."""
+        import os
+
+        out = []
+        for gen in self.vectors_log.live_paths():
+            for d in os.listdir(gen):
+                if "=" in d:
+                    out.append(os.path.join(gen, d))
+        return out
+
+    @staticmethod
+    def _publish_build(write, *, path: str, meta: dict) -> None:
+        """Write a whole new vectors table with ``write(gen_path)``, then
+        the tier's query-time metadata (``meta``: name -> DataFrame under
+        ``path``), then commit the vectors as a rewrite of any previous
+        build."""
+        log = ManifestLog(f"{path}/vectors")
+        base = log.current()
+        gen = log.write_generation(write)
+        for name, df in meta.items():
+            df.write.mode("overwrite").parquet(f"{path}/{name}")
+        log.commit_rewrite(gen, base=base)
+
+    def _append(self, write, dedup_token: str | None) -> None:
+        """Publish one generation written by ``write(path)``, exactly
+        once per ``dedup_token``: on a replay ``write`` never runs."""
+        log = self.vectors_log
+        gen = log.write_generation(write, token=dedup_token)
+        log.commit_append(gen, token=dedup_token)
+
+    def _rewrite(self, survivors) -> None:
+        """Publish ``survivors(live vectors)`` as a rewrite of the state
+        it was read from."""
+        log = self.vectors_log
+        base = log.current()
+        rows = survivors(self._vectors(base))
+        gen = log.write_generation(lambda p: self._write_layout(rows, p))
+        log.commit_rewrite(gen, base=base)
+
+    def delete_ids(self, ids_df: DataFrame) -> None:
+        """Remove vectors by id (distributed anti-join — ids never
+        collect to the driver). The survivor set is written as a new
+        generation and published by one manifest commit; the old
+        generations stay intact until GC, so a crash mid-rewrite leaves
+        the old index state, never a half-written one."""
+        ids = ids_df.select(F.col(ids_df.columns[0]).alias(self.id_col))
+        self._rewrite(lambda vec: vec.join(ids, self.id_col, "left_anti"))
+
+    def compact(self) -> None:
+        """Merge appended generations back to one generation in the
+        build layout (one file per posting list / prefix partition),
+        then GC the superseded ones (min_age_s=0: compact is explicit
+        maintenance run from the index owner, the local analog of a
+        retention-expired VACUUM)."""
+        self._rewrite(lambda vec: vec)
+        self.vectors_log.gc(keep_manifests=1, min_age_s=0.0)
+
+
+class IvfIndex(_VectorsTable):
+    """IVF index persisted as ``{path}/vectors`` (partitioned by ``cid``)
+    plus ``{path}/codebook`` (k rows)."""
+
+    # Codebooks are immutable after build() (append/delete/compact
+    # touch only the vectors log), so the k-row driver-side collect
+    # is memoized per instance, KEYED ON THE LIVE GENERATION SET:
+    # build() always commits a fresh, uniquely named vectors
+    # generation after writing the codebook, so a same-path rebuild
+    # (even after the directory was deleted and the manifest
+    # version restarted) changes the stamp and the memo
+    # self-invalidates — a long-lived served instance can never
+    # answer from stale centroids. The stamp check is one local
+    # manifest-JSON read per query; appends change the live set too,
+    # costing one redundant k-row re-collect, which is noise.
+    _codebook_rows_cache: tuple[tuple[str, ...], list] | None = None
+
+    @staticmethod
+    def _write_layout(df: DataFrame, path: str) -> None:
+        # one file per posting list: the layout that makes nprobe
+        # pruning a file-listing operation
+        df.repartition("cid").write.mode("overwrite").partitionBy(
+            "cid"
+        ).parquet(path)
 
     def _manifest_stamp(self) -> tuple[str, ...]:
         cur = self.vectors_log.current()
@@ -240,33 +219,8 @@ class IvfIndex:
             self._pq_cb_cache = None
 
     @property
-    def vectors_path(self) -> str:
-        return f"{self.path}/vectors"
-
-    @property
     def codebook_path(self) -> str:
         return f"{self.path}/codebook"
-
-    @property
-    def vectors_log(self) -> ManifestLog:
-        return ManifestLog(self.vectors_path)
-
-    def _vectors(self) -> DataFrame:
-        return read_live_table(
-            self.spark, self.vectors_path, allow_schema_evolution=False
-        )
-
-    def live_partition_dirs(self) -> list[str]:
-        """Absolute paths of the live ``<key>=<value>`` partition dirs
-        across the committed generations (test/inspection helper)."""
-        import os
-
-        out = []
-        for gen in self.vectors_log.live_paths():
-            for d in os.listdir(gen):
-                if "=" in d:
-                    out.append(os.path.join(gen, d))
-        return out
 
     @classmethod
     def build(
@@ -298,13 +252,8 @@ class IvfIndex:
         if "cid" in df.columns:
             raise ValueError("'cid' is reserved for the partition column")
         if centroids_df is None:
-            from wagtail_vector_index_spark.operators.kmeans import train_codebook
-
-            centroids, _ = train_codebook(
+            centroids_df = _trained_centroids(
                 df, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col
-            )
-            centroids_df = spark.createDataFrame(
-                centroids, "cid int, cv array<double>"
             )
         assigned = ivf_assign(
             df,
@@ -312,17 +261,11 @@ class IvfIndex:
             index_id=id_col,
             index_vec=vec_col,
         )
-        log = ManifestLog(f"{path}/vectors")
-        base = log.current()
-        gen = log.new_generation()
-        (
-            assigned.repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(log.gen_path(gen))
+        cls._publish_build(
+            lambda p: cls._write_layout(assigned, p),
+            path=path,
+            meta={"codebook": centroids_df},
         )
-        centroids_df.write.mode("overwrite").parquet(f"{path}/codebook")
-        _commit_rewrite(log, gen, base)
         return cls(spark, path, id_col=id_col, vec_col=vec_col)
 
     def append(self, df: DataFrame, *, dedup_token: str | None = None) -> None:
@@ -332,29 +275,22 @@ class IvfIndex:
         Ids must be new; replacing an id is ``delete_ids`` + ``append``.
         After a burst of appends, ``compact`` restores the
         one-file-per-posting-list layout. ``dedup_token`` makes the
-        append exactly-once per token (see :func:`_append_gen`) — the
-        streaming maintenance path passes its batch identity here."""
-        log = self.vectors_log
-        gen = _append_gen(log, dedup_token)
-        if gen is None:
-            return  # replayed batch: this token's generation is live
-        self._check_append_schema(df, computed={"cid"})
-        codebook = self.spark.read.parquet(self.codebook_path)
-        assigned = ivf_assign(
-            df,  # extra columns preserved (checked against stored schema)
-            codebook,
-            index_id=self.id_col,
-            index_vec=self.vec_col,
-        )
-        written = _gen_write_path(log, gen, dedup_token)
-        (
-            assigned.repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(written)
-        )
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=dedup_token)
+        append exactly-once per token (see
+        :meth:`ManifestLog.write_generation`; a replayed batch is a
+        no-op) — the streaming maintenance path passes its batch
+        identity here."""
+
+        def write(path: str) -> None:
+            self._check_append_schema(df, computed={"cid"})
+            assigned = ivf_assign(
+                df,  # extra columns preserved (checked against stored schema)
+                self.spark.read.parquet(self.codebook_path),
+                index_id=self.id_col,
+                index_vec=self.vec_col,
+            )
+            self._write_layout(assigned, path)
+
+        self._append(write, dedup_token)
 
     def _check_append_schema(self, df: DataFrame, *, computed: set) -> None:
         """Fail fast when an append batch's columns don't match the
@@ -375,37 +311,6 @@ class IvfIndex:
                 f" != stored layout {sorted(stored.items())} (+computed "
                 f"{sorted(computed)})"
             )
-
-    def delete_ids(self, ids_df: DataFrame) -> None:
-        """Remove vectors by id (distributed anti-join — ids never
-        collect to the driver). The survivor set is written as a new
-        generation and published by one manifest commit; the old
-        generations stay intact until GC, so a crash mid-rewrite leaves
-        the old index state, never a half-written one."""
-        ids = ids_df.select(F.col(ids_df.columns[0]).alias(self.id_col))
-        log = self.vectors_log
-        base = log.current()
-        survivors = self._vectors().join(ids, self.id_col, "left_anti")
-        gen = log.new_generation()
-        survivors.repartition("cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(log.gen_path(gen))
-        _commit_rewrite(log, gen, base)
-
-    def compact(self) -> None:
-        """Merge appended generations back to one generation with one
-        file per posting list, then GC the superseded ones (min_age_s=0:
-        compact is explicit maintenance run from the index owner, the
-        local analog of a retention-expired VACUUM)."""
-        log = self.vectors_log
-        base = log.current()
-        vec = self._vectors()
-        gen = log.new_generation()
-        vec.repartition("cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(log.gen_path(gen))
-        _commit_rewrite(log, gen, base)
-        log.gc(keep_manifests=1, min_age_s=0.0)
 
     def probed_cids(self, query_vector: Sequence[float], nprobe: int) -> list[int]:
         """The ``nprobe`` cluster ids cosine-closest to the query — picked
@@ -578,6 +483,14 @@ def pq_encode_col(
     return F.transform(F.sequence(F.lit(0), F.lit(n_m - 1)), code_for)
 
 
+def _nested_pq_codebook(rows) -> list[list[list[float]]]:
+    """(m, j, cv) codebook rows as ``codebook[m][j] -> sub-vector``."""
+    cb: list[list[list[float]]] = [[] for _ in range(1 + max(r["m"] for r in rows))]
+    for r in sorted(rows, key=lambda r: (r["m"], r["j"])):
+        cb[r["m"]].append([float(x) for x in r["cv"]])
+    return cb
+
+
 class IvfPqIndex(IvfIndex):
     """IVF-PQ: the coarse IVF partitioning of :class:`IvfIndex` plus a
     product-quantized code per vector, persisted in ONE table
@@ -637,51 +550,45 @@ class IvfPqIndex(IvfIndex):
         """
         spark = df.sparkSession
         if centroids_df is None:
-            from wagtail_vector_index_spark.operators.kmeans import train_codebook
-
-            centroids, _ = train_codebook(
+            centroids_df = _trained_centroids(
                 df, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col
-            )
-            centroids_df = spark.createDataFrame(
-                centroids, "cid int, cv array<double>"
             )
         if pq_codebook_df is None:
             pq_codebook_df = cls._sampled_pq_codebook(
                 df, id_col=id_col, vec_col=vec_col, m=m, ksub=ksub
             )
-        cb_rows = pq_codebook_df.collect()
-        n_m = 1 + max(r["m"] for r in cb_rows)
-        codebook: list[list[list[float]]] = [[] for _ in range(n_m)]
-        for r in sorted(cb_rows, key=lambda r: (r["m"], r["j"])):
-            codebook[r["m"]].append([float(x) for x in r["cv"]])
+        codebook = _nested_pq_codebook(pq_codebook_df.collect())
 
+        cls._publish_build(
+            lambda p: cls._write_encoded(
+                df, centroids_df, codebook, p, id_col=id_col, vec_col=vec_col
+            ),
+            path=path,
+            meta={"codebook": centroids_df, "pq_codebook": pq_codebook_df},
+        )
+        return cls(spark, path, id_col=id_col, vec_col=vec_col)
+
+    @staticmethod
+    def _write_encoded(
+        df, centroids_df, codebook, path: str, *, id_col: str, vec_col: str
+    ) -> None:
+        """Coarse-assign and PQ-encode new rows and write them as one
+        generation. Repartition BEFORE encoding (spread the kernel across
+        the cluster, not the source's file count), then encode with the
+        Arrow-batched numpy kernel — the fold-expression twin
+        (pq_encode_col) evaluates interpreted at ~90 ms/row and exists
+        for SQL-replay documentation/tests, not for builds. The rows are
+        then already partitioned on ``cid``, so they skip the layout's
+        repartition, which would shuffle them a second time."""
         assigned = ivf_assign(
             df.select(id_col, vec_col),
             centroids_df,
             index_id=id_col,
             index_vec=vec_col,
         )
-        # repartition BEFORE encoding (spread the kernel across the
-        # cluster, not the source's file count), then encode with the
-        # Arrow-batched numpy kernel — the fold-expression twin
-        # (pq_encode_col) evaluates interpreted at ~90 ms/row and exists
-        # for SQL-replay documentation/tests, not for builds.
-        encoded = assigned.repartition("cid").withColumn(
+        assigned.repartition("cid").withColumn(
             "codes", pq_encode_udf(codebook)(F.col(vec_col))
-        )
-        log = ManifestLog(f"{path}/vectors")
-        base = log.current()
-        gen = log.new_generation()
-        (
-            encoded
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(log.gen_path(gen))
-        )
-        centroids_df.write.mode("overwrite").parquet(f"{path}/codebook")
-        pq_codebook_df.write.mode("overwrite").parquet(f"{path}/pq_codebook")
-        _commit_rewrite(log, gen, base)
-        return cls(spark, path, id_col=id_col, vec_col=vec_col)
+        ).write.mode("overwrite").partitionBy("cid").parquet(path)
 
     @staticmethod
     def _sampled_pq_codebook(
@@ -716,10 +623,7 @@ class IvfPqIndex(IvfIndex):
         if self._pq_cb_cache is not None and self._pq_cb_cache[0] == stamp:
             return self._pq_cb_cache[1]
         rows = self.spark.read.parquet(self.pq_codebook_path).collect()
-        n_m = 1 + max(r["m"] for r in rows)
-        cb: list[list[list[float]]] = [[] for _ in range(n_m)]
-        for r in sorted(rows, key=lambda r: (r["m"], r["j"])):
-            cb[r["m"]].append([float(x) for x in r["cv"]])
+        cb = _nested_pq_codebook(rows)
         self._pq_cb_cache = (stamp, cb)
         return cb
 
@@ -735,29 +639,17 @@ class IvfPqIndex(IvfIndex):
                 f"batch columns {sorted(extra)} would be silently dropped; "
                 f"payload columns are an IvfIndex feature"
             )
-        log = self.vectors_log
-        gen = _append_gen(log, dedup_token)
-        if gen is None:
-            return
-        codebook = self.spark.read.parquet(self.codebook_path)
-        cb = self._pq_codebook()
-        assigned = ivf_assign(
-            df.select(self.id_col, self.vec_col),
-            codebook,
-            index_id=self.id_col,
-            index_vec=self.vec_col,
-        ).repartition("cid").withColumn(
-            "codes", pq_encode_udf(cb)(F.col(self.vec_col))
+        self._append(
+            lambda p: self._write_encoded(
+                df,
+                self.spark.read.parquet(self.codebook_path),
+                self._pq_codebook(),
+                p,
+                id_col=self.id_col,
+                vec_col=self.vec_col,
+            ),
+            dedup_token,
         )
-        written = _gen_write_path(log, gen, dedup_token)
-        (
-            assigned
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(written)
-        )
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=dedup_token)
 
     def adc_topk(
         self,
@@ -838,7 +730,7 @@ class IvfPqIndex(IvfIndex):
         )
 
 
-class LshIndex:
+class LshIndex(_VectorsTable):
     """Hyperplane-LSH index persisted as ``{path}/vectors`` (partitioned
     by ``bucket_pfx``, the top bits of the sign-bucket; the full
     ``bucket`` rides as an ordinary sorted column) plus ``{path}/meta``
@@ -854,23 +746,7 @@ class LshIndex:
     ``bucket``, the pushed ``bucket IN (...)`` filter prunes row groups
     via parquet min/max stats inside the surviving files."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "vector",
-    ):
-        self.spark = spark
-        self.path = path
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self._meta = None
-
-    @property
-    def vectors_path(self) -> str:
-        return f"{self.path}/vectors"
+    _meta = None
 
     @property
     def meta_path(self) -> str:
@@ -881,27 +757,6 @@ class LshIndex:
         if self._meta is None:
             self._meta = self.spark.read.parquet(self.meta_path).first()
         return self._meta
-
-    @property
-    def vectors_log(self) -> ManifestLog:
-        return ManifestLog(self.vectors_path)
-
-    def _vectors(self) -> DataFrame:
-        return read_live_table(
-            self.spark, self.vectors_path, allow_schema_evolution=False
-        )
-
-    def live_partition_dirs(self) -> list[str]:
-        """Absolute paths of the live ``<key>=<value>`` partition dirs
-        across the committed generations (test/inspection helper)."""
-        import os
-
-        out = []
-        for gen in self.vectors_log.live_paths():
-            for d in os.listdir(gen):
-                if "=" in d:
-                    out.append(os.path.join(gen, d))
-        return out
 
     def _bucketize(self, df: DataFrame) -> DataFrame:
         """Stamp (bucket, bucket_pfx) on new rows using the stored meta —
@@ -915,13 +770,16 @@ class LshIndex:
             .withColumn("bucket_pfx", F.shiftright("bucket", shift))
         )
 
-    def _write_gen(self, bucketed: DataFrame, gen_path: str) -> None:
+    @staticmethod
+    def _write_layout(df: DataFrame, path: str) -> None:
+        # one file per prefix partition, sorted by full bucket so the
+        # pushed bucket filter prunes row groups inside it
         (
-            bucketed.repartition("bucket_pfx")
+            df.repartition("bucket_pfx")
             .sortWithinPartitions("bucket")
             .write.mode("overwrite")
             .partitionBy("bucket_pfx")
-            .parquet(gen_path)
+            .parquet(path)
         )
 
     @classmethod
@@ -950,23 +808,14 @@ class LshIndex:
         planes = hyperplane_lsh_planes(num_planes, dim)
         bucketed = df.select(id_col, vec_col).withColumn(
             "bucket", lsh_bucket_col(F.col(vec_col), planes)
-        )
-        log = ManifestLog(f"{path}/vectors")
-        base = log.current()
-        gen = log.new_generation()
-        (
-            bucketed.withColumn("bucket_pfx", F.shiftright("bucket", shift))
-            .repartition("bucket_pfx")
-            .sortWithinPartitions("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket_pfx")
-            .parquet(log.gen_path(gen))
-        )
-        spark.createDataFrame(
+        ).withColumn("bucket_pfx", F.shiftright("bucket", shift))
+        meta = spark.createDataFrame(
             [(num_planes, dim, prefix_bits)],
             "num_planes int, dim int, prefix_bits int",
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        _commit_rewrite(log, gen, base)
+        )
+        cls._publish_build(
+            lambda p: cls._write_layout(bucketed, p), path=path, meta={"meta": meta}
+        )
         return cls(spark, path, id_col=id_col, vec_col=vec_col)
 
     def append(self, df: DataFrame, *, dedup_token: str | None = None) -> None:
@@ -981,37 +830,9 @@ class LshIndex:
                 f"batch columns {sorted(extra)} would be silently dropped; "
                 f"payload columns are an IvfIndex feature"
             )
-        log = self.vectors_log
-        gen = _append_gen(log, dedup_token)
-        if gen is None:
-            return
-        written = _gen_write_path(log, gen, dedup_token)
-        self._write_gen(self._bucketize(df), written)
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=dedup_token)
-
-    def delete_ids(self, ids_df: DataFrame) -> None:
-        """Remove vectors by id (distributed anti-join; survivor set
-        published as a rewrite commit — parity with IvfIndex.delete_ids)."""
-        ids = ids_df.select(F.col(ids_df.columns[0]).alias(self.id_col))
-        log = self.vectors_log
-        base = log.current()
-        survivors = self._vectors().join(ids, self.id_col, "left_anti")
-        gen = log.new_generation()
-        self._write_gen(survivors, log.gen_path(gen))
-        _commit_rewrite(log, gen, base)
-
-    def compact(self) -> None:
-        """Merge appended generations back to one sorted file per prefix
-        partition, then GC superseded generations (parity with
-        IvfIndex.compact)."""
-        log = self.vectors_log
-        base = log.current()
-        vec = self._vectors()
-        gen = log.new_generation()
-        self._write_gen(vec, log.gen_path(gen))
-        _commit_rewrite(log, gen, base)
-        log.gc(keep_manifests=1, min_age_s=0.0)
+        self._append(
+            lambda p: self._write_layout(self._bucketize(df), p), dedup_token
+        )
 
     def probed_buckets(
         self, query_vector: Sequence[float], max_probe_hamming: int

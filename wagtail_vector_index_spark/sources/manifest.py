@@ -40,9 +40,11 @@ lake the manifest log IS the transaction.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
+import shutil
 import threading
 import time
 import uuid
@@ -54,8 +56,9 @@ MANIFEST_DIR = "_manifests"
 _MANIFEST_RE = re.compile(r"^manifest-(\d{12})\.json$")
 _GEN_RE = re.compile(r"^gen-\d{20}-[0-9a-f]{8}$")
 # deterministic token generations (exactly-once appends keyed on a
-# dedup token — ann_index.py): the name is content-addressed, so it
-# carries no timestamp; GC ages these by directory mtime instead.
+# dedup token — ManifestLog.write_generation): the name is
+# content-addressed, so it carries no timestamp; GC ages these by
+# directory mtime instead.
 _TOK_GEN_RE = re.compile(r"^gen-tok-[0-9a-f]{24}$")
 
 
@@ -139,13 +142,156 @@ class ManifestLog:
     # -- write side ----------------------------------------------------------
 
     def new_generation(self) -> str:
-        """A unique, not-yet-live generation name. Write data under
-        ``gen_path(name)``, then publish it with :meth:`commit` — until
-        then the directory is invisible to every reader."""
+        """A unique, not-yet-live generation name. Until a commit lists
+        it, the directory is invisible to every reader."""
         return f"gen-{time.time_ns():020d}-{uuid.uuid4().hex[:8]}"
 
     def gen_path(self, name: str) -> str:
         return os.path.join(self.root, name)
+
+    def write_generation(self, write, *, token: str | None = None) -> str | None:
+        """Write one new generation with ``write(path)`` and return its
+        name for :meth:`commit_append` / :meth:`commit_rewrite` — or None
+        when there is nothing to commit: ``write`` produced no data files
+        (Spark writes an empty frame as a bare ``_SUCCESS`` dir, which a
+        later scan cannot infer a schema from), or ``token`` was already
+        applied, in which case ``write`` is never called.
+
+        Without a token the name is fresh (no collision possible) and
+        ``write`` targets it directly. With a token the append is
+        exactly-once per token (stream replays): the token is checked
+        against the manifest's processed-token window — the memory lives
+        IN the manifest, so it survives compaction/GC of the generation
+        that carried the batch — and the name is a deterministic function
+        of the token, so a crash between data write and commit leaves a
+        directory the replay safely replaces. Because that name may
+        already be live and serving under a racing replay, a token write
+        goes to a unique staging directory first and is renamed into
+        place by :meth:`_publish`."""
+        if token is None:
+            gen = self.new_generation()
+            written = self.gen_path(gen)
+        else:
+            gen = f"gen-tok-{hashlib.sha256(token.encode()).hexdigest()[:24]}"
+            cur = self.current()
+            if cur is not None and (token in cur.tokens or gen in cur.live):
+                # Already applied. The gen-in-live check matters when the
+                # token is absent from the window (pre-tokens-field
+                # manifests, or a MAX_TOKENS eviction): without it a
+                # replay would OVERWRITE a live, serving generation
+                # directory in place.
+                return None
+            written = self.gen_path(f"{gen}.stage-{uuid.uuid4().hex[:12]}")
+        write(written)
+        if not has_data_files(written):
+            shutil.rmtree(written, ignore_errors=True)
+            return None
+        if token is not None:
+            self._publish(written, gen)
+        return gen
+
+    def _publish(self, staged: str, gen: str) -> None:
+        """Atomically move a staged token generation into its final name.
+        Closes the TOCTOU of the pre-write token/liveness check in
+        :meth:`write_generation`: it can pass for BOTH of two racing
+        replays, and the loser's ``mode('overwrite')`` write would
+        transiently delete files under a directory the winner had just
+        committed as live. With a staged write the loser's rename simply
+        fails (POSIX rename won't clobber a non-empty directory) and its
+        identical copy is discarded; the live directory is never
+        rewritten in place. A crash leftover — the directory exists but
+        was never committed — is replaced only after re-checking the
+        manifest immediately before the swap, which narrows (not
+        eliminates: this is a local-FS stand-in for an object-store
+        conditional put) the remaining window to
+        rmtree-vs-concurrent-commit of byte-identical data."""
+        final = self.gen_path(gen)
+        try:
+            os.rename(staged, final)
+            return
+        except OSError:
+            pass
+        cur = self.current()
+        if cur is not None and gen in cur.live:
+            # a racing replay won and its (identical) data is serving
+            shutil.rmtree(staged, ignore_errors=True)
+            return
+        # uncommitted leftover from a crashed writer: replace it
+        shutil.rmtree(final, ignore_errors=True)
+        try:
+            os.rename(staged, final)
+        except OSError:
+            shutil.rmtree(staged, ignore_errors=True)
+
+    def commit_append(
+        self,
+        gen: str | None,
+        *,
+        token: str | None = None,
+        reset: tuple[str, int] | None = None,
+    ) -> Manifest | None:
+        """Publish ``gen`` on top of whatever is live, plus an optional
+        reset watermark ``reset=(index_name, batch_id)`` and exactly-once
+        ``token``. Returns None without committing when there is nothing
+        to publish (no generation and no reset). Appenders compose: each
+        re-reads the freshest state on conflict, so two appenders both
+        survive."""
+        if gen is None and reset is None:
+            return None
+
+        def up(cur: Manifest | None):
+            live = list(cur.live) if cur else []
+            resets = {k: list(v) for k, v in (cur.resets if cur else {}).items()}
+            tokens = list(cur.tokens) if cur else []
+            if token is not None and token in tokens:
+                # a racing replay committed first — keep the state
+                # unchanged (the commit becomes a no-op version bump)
+                return live, resets, tokens
+            # idempotent for deterministic (token) generation names: a
+            # replayed commit must not list the same generation twice
+            if gen is not None and gen not in live:
+                live.append(gen)
+            if reset is not None:
+                resets.setdefault(reset[0], []).append(reset[1])
+            if token is not None:
+                tokens.append(token)
+            return live, resets, tokens
+
+        return self.commit(up)
+
+    def commit_rewrite(
+        self,
+        gen: str | None,
+        *,
+        base: Manifest | None,
+        replaced=None,
+    ) -> Manifest:
+        """Publish ``gen`` as a rewrite of the state read at ``base``:
+        it replaces ``replaced`` (default: every generation live at
+        ``base``), and generations and resets committed by OTHER writers
+        since ``base`` are carried over, so a concurrent append is never
+        silently dropped by a compaction racing with it. ``base``'s
+        resets are consumed — the rewrite already applied them.
+        ``gen=None`` publishes the rewrite of an empty state (only the
+        carried-over generations stay)."""
+        if replaced is None:
+            replaced = base.live if base else ()
+        dropped = set(replaced)
+        base_resets = base.resets if base else {}
+
+        def up(cur: Manifest | None):
+            live = ([gen] if gen is not None else []) + [
+                g for g in (cur.live if cur else ()) if g not in dropped
+            ]
+            resets: dict[str, list[int]] = {}
+            for idx, ws in (cur.resets if cur else {}).items():
+                consumed = set(base_resets.get(idx, []))
+                kept = [w for w in ws if w not in consumed]
+                if kept:
+                    resets[idx] = kept
+            return live, resets
+
+        return self.commit(up)
 
     def commit(self, update, *, max_retries: int = 20) -> Manifest:
         """Atomically publish a new table state.
@@ -156,7 +302,7 @@ class ManifestLog:
         one; it re-runs on every conflict, so writers compose (two
         appenders both survive, an appender landing during a rewrite is
         carried over by the rewriter's update function — see
-        DocumentStore._rewrite_commit). A 2-tuple return carries the
+        :meth:`commit_rewrite`). A 2-tuple return carries the
         current token window forward unchanged, so rewrites/compactions
         never forget which streaming batches were applied.
         """
@@ -228,8 +374,6 @@ class ManifestLog:
         (the next PRESENT manifest's ts bounds the true successor's
         from above). Single-maintainer callers (the in-band stream
         hooks) keep the default 0."""
-        import shutil
-
         cur = self.current()
         if cur is None:
             return []
@@ -276,23 +420,12 @@ class ManifestLog:
             # supersedes a token append, or when a writer crashed
             # between publish-rename and commit on an abandoned stream
             # — without this sweep they leak forever.
-            if not _TOK_GEN_RE.match(n) or n in referenced:
-                continue
-            p = os.path.join(self.root, n)
-            try:
-                if os.path.getmtime(p) > time.time() - min_age_s:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(p, ignore_errors=True)
-            deleted.append(p)
-        for n in os.listdir(self.root):
-            # staging directories from token-deduped appends
-            # (gen-tok-*.stage-*) are swapped into place by a rename and
-            # cleaned up on every failure path; one can only survive a
-            # writer crash between write and publish. Sweep those by
-            # mtime under the same in-flight-protection window.
-            if ".stage-" not in n:
+            # Their staging directories (gen-tok-*.stage-*) are swapped
+            # into place by a rename and removed when the write was
+            # empty or lost the race; one can only survive a writer
+            # crash between write and publish. Both are swept by mtime
+            # under the same in-flight-protection window.
+            if n in referenced or not (_TOK_GEN_RE.match(n) or ".stage-" in n):
                 continue
             p = os.path.join(self.root, n)
             try:

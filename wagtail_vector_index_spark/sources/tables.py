@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from wagtail_vector_index_spark.sources.manifest import (
     Manifest,
     ManifestLog,
-    has_data_files,
     read_live_table,
 )
 
@@ -161,66 +160,16 @@ class DocumentStore:
         """Write one immutable generation dir (NOT yet visible) and return
         its name for the commit — or None if the frame was empty (an
         empty generation is unreadable and must not be published)."""
-        import shutil
-
-        gen = self.log.new_generation()
-        (
-            stamped.withColumn("dim", F.array_size("vector"))
+        return self.log.write_generation(
+            lambda path: stamped.withColumn("dim", F.array_size("vector"))
             .write.mode("overwrite")  # the dir name is unique and unpublished
             .partitionBy("index_name", "dim")
-            .parquet(self.log.gen_path(gen))
+            .parquet(path)
         )
-        if not has_data_files(self.log.gen_path(gen)):
-            shutil.rmtree(self.log.gen_path(gen), ignore_errors=True)
-            return None
-        return gen
-
-    def _append_commit(self, gen: str | None) -> None:
-        if gen is None:
-            return
-
-        def up(cur: Manifest | None):
-            live = list(cur.live) if cur else []
-            resets = {k: list(v) for k, v in (cur.resets if cur else {}).items()}
-            return live + [gen], resets
-
-        self.log.commit(up)
-
-    def _rewrite_commit(
-        self,
-        gen: str | None,
-        base: Manifest | None,
-        reset: tuple[str, int] | None = None,
-    ) -> None:
-        """Publish ``gen`` as a rewrite of the state read at ``base``:
-        generations (and resets) committed by OTHER writers since ``base``
-        are carried over, so a concurrent append is never silently
-        dropped by a compact/vacuum racing with it. ``gen=None`` publishes
-        the rewrite of an empty state (only carried-over data stays)."""
-        base_live = set(base.live) if base else set()
-        base_resets = base.resets if base else {}
-
-        def up(cur: Manifest | None):
-            cur_live = list(cur.live) if cur else []
-            cur_resets = cur.resets if cur else {}
-            live = ([gen] if gen is not None else []) + [
-                g for g in cur_live if g not in base_live
-            ]
-            resets: dict[str, list[int]] = {}
-            for idx, ws in cur_resets.items():
-                consumed = set(base_resets.get(idx, []))
-                kept = [w for w in ws if w not in consumed]
-                if kept:
-                    resets[idx] = kept
-            if reset is not None:
-                resets.setdefault(reset[0], []).append(reset[1])
-            return live, resets
-
-        self.log.commit(up)
 
     def upsert(self, documents: DataFrame) -> None:
         """Append a new generation; conflicts resolve at read (S3-S5)."""
-        self._append_commit(self._write_generation(self._stamp(documents)))
+        self.log.commit_append(self._write_generation(self._stamp(documents)))
 
     def delete(self, index_name: str, doc_keys: list[str]) -> None:
         """Tombstone the given doc keys (S6) — append-only delete.
@@ -241,7 +190,7 @@ class DocumentStore:
         self._write_tombstones(existing)
 
     def _write_tombstones(self, existing: DataFrame) -> None:
-        self._append_commit(
+        self.log.commit_append(
             self._write_generation(self._stamp(existing, deleted=True))
         )
 
@@ -251,15 +200,7 @@ class DocumentStore:
         rewritten. Physical reclamation is :meth:`vacuum`'s job."""
         if not self._exists():
             return
-        w = time.time_ns()
-
-        def up(cur: Manifest | None):
-            live = list(cur.live) if cur else []
-            resets = {k: list(v) for k, v in (cur.resets if cur else {}).items()}
-            resets.setdefault(index_name, []).append(w)
-            return live, resets
-
-        self.log.commit(up)
+        self.log.commit_append(None, reset=(index_name, time.time_ns()))
 
     def compact(self, index_name: str) -> None:
         """Rewrite the index to its resolved state (one row per key,
@@ -267,19 +208,16 @@ class DocumentStore:
         ``read`` pays a window shuffle per generation layer; at scale,
         compact after a burst of upserts so subsequent reads of this index
         scan a single clean generation. Other indexes' data is untouched,
-        and pre-compact history stays time-travelable until vacuum."""
+        and pre-compact history stays time-travelable until vacuum.
+
+        Caveat: the watermark is stamped when compact starts, so an
+        upsert of this index stamped before that but not yet committed
+        when compact reads is hidden by it (see docs/storage.md)."""
         self._current()
         ts = time.time_ns()
         resolved = self._stamp(self.read(index_name), ts=ts)
         gen = self._write_generation(resolved)
-
-        def up(cur: Manifest | None):
-            live = list(cur.live) if cur else []
-            resets = {k: list(v) for k, v in (cur.resets if cur else {}).items()}
-            resets.setdefault(index_name, []).append(ts)
-            return live + ([gen] if gen is not None else []), resets
-
-        self.log.commit(up)
+        self.log.commit_append(gen, reset=(index_name, ts))
 
     def overwrite_index(self, index_name: str, documents: DataFrame) -> None:
         """Rebuild (S8): one new generation + a reset watermark equal to
@@ -287,33 +225,22 @@ class DocumentStore:
         single atomic commit, with no rewrite of neighboring indexes."""
         ts = time.time_ns()
         gen = self._write_generation(self._stamp(documents, ts=ts))
-
-        def up(cur: Manifest | None):
-            live = list(cur.live) if cur else []
-            resets = {k: list(v) for k, v in (cur.resets if cur else {}).items()}
-            resets.setdefault(index_name, []).append(ts)
-            return live + ([gen] if gen is not None else []), resets
-
-        self.log.commit(up)
+        self.log.commit_append(gen, reset=(index_name, ts))
 
     def vacuum(self, *, min_age_s: float = 3600.0) -> None:
         """Physically reclaim space: rewrite every row that is live under
         the current resets (ALL batch layers kept — surviving history
         remains time-travelable) into one generation, commit it as the
         only live one with resets folded in, then GC unreferenced
-        generation dirs and superseded manifests."""
-        import shutil
-
+        generation dirs and superseded manifests. A rewrite commit:
+        generations appended by other writers meanwhile are carried
+        over."""
         base = self._current()
         raw = self._reset_filter(self._raw(base), base, None)
-        gen = self.log.new_generation()
-        (
-            raw.write.mode("overwrite")
+        gen = self.log.write_generation(
+            lambda path: raw.write.mode("overwrite")
             .partitionBy("index_name", "dim")
-            .parquet(self.log.gen_path(gen))
+            .parquet(path)
         )
-        if not has_data_files(self.log.gen_path(gen)):
-            shutil.rmtree(self.log.gen_path(gen), ignore_errors=True)
-            gen = None
-        self._rewrite_commit(gen, base)
+        self.log.commit_rewrite(gen, base=base)
         self.log.gc(keep_manifests=1, min_age_s=min_age_s)

@@ -185,8 +185,9 @@ def _dir_parquet_bytes(p: str) -> int:
     return total
 
 
-def _select_compaction(log, fanout: int) -> list | None:
-    """The generations one compaction cycle should merge, or None.
+def _select_compaction(log, base, fanout: int) -> list | None:
+    """The generations of ``base`` (a committed manifest of ``log``) one
+    compaction cycle should merge, or None.
 
     ``fanout`` == 0: full merge — every live generation into one.
     >= 2: size-tiered — when the live count reaches ``2 * fanout``,
@@ -199,7 +200,6 @@ def _select_compaction(log, fanout: int) -> list | None:
     amortization). Full merge keeps exactly one live generation but
     rewrites the whole corpus every cycle — right for bounded tables;
     tiered is the 100-TB continuous-ingest setting."""
-    base = log.current()
     if base is None or len(base.live) <= 1:
         return None
     if fanout >= 2:
@@ -255,17 +255,18 @@ def _compact_corpus_table(
     ``sidecar=(dirname, batch_sigs_fn)`` — a 16-longs/doc scan, never a
     corpus re-shingle), write both into the new generation directory
     BEFORE the single manifest commit publishes it, carry over
-    untouched and concurrently appended generations via the commit's
-    update function, then GC superseded generations. A crash at any
+    untouched and concurrently appended generations (a rewrite commit
+    of just the merge set — ``ManifestLog.commit_rewrite(replaced=)``),
+    then GC superseded generations. A crash at any
     point leaves the previous state serving. Returns True iff a merge
     committed."""
     import os
-    import shutil
     from functools import reduce
 
     from wagtail_vector_index_spark.sources.manifest import has_data_files
 
-    merge = _select_compaction(log, fanout)
+    base = log.current()
+    merge = _select_compaction(log, base, fanout)
     if not merge:
         return False
     # coalesce (narrow — no shuffle) to the session's declared
@@ -290,31 +291,20 @@ def _compact_corpus_table(
                 for gp in paths
             ],
         ).coalesce(nparts)
-    gen = log.new_generation()
-    gp = log.gen_path(gen)
-    data.write.mode("overwrite").parquet(gp)
-    ok = has_data_files(gp)
-    if ok and sigs is not None:
-        sigs.write.mode("overwrite").parquet(
-            os.path.join(gp, sidecar[0])
-        )
-    if not ok:
-        shutil.rmtree(gp, ignore_errors=True)
-    merged = set(merge)
 
-    def up(cur):
-        out = [g for g in (cur.live if cur else ()) if g not in merged]
-        if ok:
-            out.append(gen)
-        return out, {}
+    def write(gp: str) -> None:
+        data.write.mode("overwrite").parquet(gp)
+        if sigs is not None and has_data_files(gp):
+            sigs.write.mode("overwrite").parquet(os.path.join(gp, sidecar[0]))
 
-    log.commit(up)
+    gen = log.write_generation(write)
+    log.commit_rewrite(gen, base=base, replaced=merge)
     log.gc(
         keep_manifests=keep_manifests,
         min_age_s=min_age_s,
         reader_grace_s=reader_grace_s,
     )
-    return ok
+    return gen is not None
 
 
 def compact_neardup_corpus(
@@ -482,12 +472,6 @@ def neardup_corpus_stream(
     import os
     from functools import reduce
 
-    from wagtail_vector_index_spark.operators.ann_index import (
-        _append_gen,
-        _commit_append,
-        _gen_write_path,
-        _publish_gen_dir,
-    )
     from wagtail_vector_index_spark.operators.dedup import (
         incremental_neardup_filter,
         keep_representatives_exact,
@@ -518,10 +502,11 @@ def neardup_corpus_stream(
         rename race to a concurrent backfill just reads the winner's
         identical copy.
 
-        The backfill rename is POSIX-only (like ``_publish_gen_dir``,
-        this module is the local-FS stand-in the manifest protocol
-        docstring describes): ``os.rename`` is atomic and
-        won't-clobber on a local filesystem, neither on an object
+        The backfill rename is POSIX-only (like the staged-generation
+        publish in ``ManifestLog.write_generation``, this module is the
+        local-FS stand-in the manifest protocol docstring describes):
+        ``os.rename`` is atomic and won't-clobber on a local
+        filesystem, neither on an object
         store — an S3 deployment should disable the in-place backfill
         (run one batch of the stream before upgrading parameters, so
         every generation is written WITH its sidecar and this path
@@ -532,67 +517,62 @@ def neardup_corpus_stream(
         yields byte-equivalent content, and a lost/partial copy is
         re-derived on the next trigger (`has_data_files` gates the
         read)."""
-        frames = [_gen_sigs(spark, gp) for gp in log.live_paths(cur)]
+        # sidecar read/backfill/direct-compute, shared with the
+        # out-of-band compaction entry
+        frames = [
+            _gen_sigs_read(spark, gp, sigs_dir=sigs_dir, batch_sigs=_batch_sigs)
+            for gp in log.live_paths(cur)
+        ]
         return reduce(lambda a, b: a.unionByName(b), frames)
-
-    def _gen_sigs(spark, gp) -> DataFrame:
-        # shared sidecar read/backfill/direct-compute (r13: module-level
-        # so the out-of-band compaction entry reuses it verbatim)
-        return _gen_sigs_read(
-            spark, gp, sigs_dir=sigs_dir, batch_sigs=_batch_sigs
-        )
-
-    def _compact(spark) -> None:
-        """One in-band compaction cycle — the shared machinery behind
-        :func:`compact_neardup_corpus` (r13), with min_age_s=0 because
-        the stream owns table maintenance here (see docstring). A
-        deployment that wants merge-free triggers instead runs
-        ``compact_every=0`` and calls :func:`compact_neardup_corpus`
-        from a separate maintenance process."""
-        compact_neardup_corpus(
-            spark, path, fanout=compact_fanout, id_col=id_col,
-            text_col=text_col, n=n, num_hashes=num_hashes,
-            min_age_s=0.0, keep_manifests=1, reader_grace_s=0.0,
-        )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         token = f"{checkpoint_dir}#{batch_id}"
-        gen = _append_gen(log, token)
-        if gen is None:
-            return  # replayed batch: already live
         spark = batch_df.sparkSession
-        # within-batch self-dedup first (chains collapse exactly)
-        pairs = minhash_lsh_pairs(
-            batch_df, id_col=id_col, text_col=text_col,
-            threshold=threshold, **minhash_kwargs,
-        )
-        survivors = keep_representatives_exact(batch_df, pairs, id_col=id_col)
-        cur = log.current()
-        if cur is not None and cur.live:
-            survivors = incremental_neardup_filter(
-                survivors,
-                None,
-                id_col=id_col,
-                text_col=text_col,
-                threshold=threshold,
-                corpus_signatures=_standing_signatures(spark, cur),
-                **minhash_kwargs,
+
+        def write(written: str) -> None:
+            # runs only for a batch not applied yet (a replay is a no-op)
+            # within-batch self-dedup first (chains collapse exactly)
+            pairs = minhash_lsh_pairs(
+                batch_df, id_col=id_col, text_col=text_col,
+                threshold=threshold, **minhash_kwargs,
             )
-        written = _gen_write_path(log, gen, token)
-        survivors.write.mode("overwrite").parquet(written)
-        if has_data_files(written):
-            # signatures from the just-written parquet (leaf scan — not
-            # the survivors plan, which would re-run the whole dedup),
-            # into the STAGED dir so publish/commit stay one atomic step
-            _batch_sigs(spark.read.parquet(written)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(written, sigs_dir))
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=token)
+            survivors = keep_representatives_exact(
+                batch_df, pairs, id_col=id_col
+            )
+            cur = log.current()
+            if cur is not None and cur.live:
+                survivors = incremental_neardup_filter(
+                    survivors,
+                    None,
+                    id_col=id_col,
+                    text_col=text_col,
+                    threshold=threshold,
+                    corpus_signatures=_standing_signatures(spark, cur),
+                    **minhash_kwargs,
+                )
+            survivors.write.mode("overwrite").parquet(written)
+            if has_data_files(written):
+                # signatures from the just-written parquet (leaf scan —
+                # not the survivors plan, which would re-run the whole
+                # dedup), into the STAGED dir so publish/commit stay one
+                # atomic step
+                _batch_sigs(spark.read.parquet(written)).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(written, sigs_dir))
+
+        log.commit_append(log.write_generation(write, token=token), token=token)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact(spark)
+            # one in-band cycle of the out-of-band entry, min_age_s=0
+            # because the stream owns table maintenance here (see
+            # docstring); merge-free triggers run compact_every=0 and
+            # call compact_neardup_corpus from a maintenance process
+            compact_neardup_corpus(
+                spark, path, fanout=compact_fanout, id_col=id_col,
+                text_col=text_col, n=n, num_hashes=num_hashes,
+                min_age_s=0.0, keep_manifests=1, reader_grace_s=0.0,
+            )
 
     writer = (
         doc_stream.writeStream.foreachBatch(_process)
@@ -672,23 +652,9 @@ def decontaminated_corpus_stream(
         ngram_fingerprints_col,
         token_sha_hashes_col,
     )
-    from wagtail_vector_index_spark.operators.ann_index import (
-        _append_gen,
-        _commit_append,
-        _gen_write_path,
-        _publish_gen_dir,
-    )
     from wagtail_vector_index_spark.sources.manifest import ManifestLog
 
     log = ManifestLog(path)
-
-    def _compact(spark) -> None:
-        # shared machinery behind compact_decontaminated_corpus (r13);
-        # min_age_s=0 — the stream owns table maintenance here
-        compact_decontaminated_corpus(
-            spark, path, fanout=compact_fanout, min_age_s=0.0,
-            keep_manifests=1, reader_grace_s=0.0,
-        )
 
     def _gram_rows(src: DataFrame, *cols: str) -> DataFrame:
         # token hashes bound before fingerprinting (see
@@ -719,9 +685,6 @@ def decontaminated_corpus_stream(
         if batch_df.isEmpty():
             return
         token = f"{checkpoint_dir}#{batch_id}"
-        gen = _append_gen(log, token)
-        if gen is None:
-            return  # replayed batch: already live
         flagged = (
             _gram_rows(batch_df, id_col)
             .join(eval_state["grams"], "__sh")
@@ -729,12 +692,16 @@ def decontaminated_corpus_stream(
             .distinct()
         )
         survivors = batch_df.join(flagged, id_col, "left_anti")
-        written = _gen_write_path(log, gen, token)
-        survivors.write.mode("overwrite").parquet(written)
-        _publish_gen_dir(log, written, gen)
-        _commit_append(log, gen, dedup_token=token)
+        gen = log.write_generation(
+            lambda p: survivors.write.mode("overwrite").parquet(p), token=token
+        )
+        log.commit_append(gen, token=token)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            _compact(batch_df.sparkSession)
+            # min_age_s=0 — the stream owns table maintenance here
+            compact_decontaminated_corpus(
+                batch_df.sparkSession, path, fanout=compact_fanout,
+                min_age_s=0.0, keep_manifests=1, reader_grace_s=0.0,
+            )
 
     writer = (
         doc_stream.writeStream.foreachBatch(_process)
