@@ -19,10 +19,18 @@ therefore reports, per query:
 
 The headline set is FROZEN at the r2 list (totals stay comparable);
 queries added later rounds are reported separately under ``added``.
+
+``python bench.py --only q1 q2 ...`` times just the named catalog
+queries with the same loop and prints one JSON object
+``{"queries": {name: record}, "sf": ...}``; it leaves BENCH_DETAIL.json
+alone. Point $SPARK_GRAFT_SF_DIR at a ``tools/stage.py`` output to time
+a scaled corpus. The session is ``bench_session``: the engine's
+``RECOMMENDED_CONF`` plus deployment settings only.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -208,43 +216,71 @@ HEAVY_TRACKED = [
 SPARK_RUNS = 5
 DUCKDB_RUNS = 3
 
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
 
-def main() -> None:
+
+def bench_session(app_name: str, **display: str):
+    """The bench's Spark session: the engine's ``RECOMMENDED_CONF`` on
+    local[$SPARK_GRAFT_CPUS] with that many shuffle partitions. Only
+    deployment settings are added here (driver memory, no UI, and a
+    caller's display-only plan-string limits), so what the bench, the
+    oracle gate, the plan tools and the stager measure is the config the
+    engine ships."""
+    from wagtail_vector_index_spark.session import build_session
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = build_session(
+        app_name,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
+        **{"spark.driver.memory": "16g", "spark.ui.enabled": "false"},
+        **display,
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument(
+        "--only",
+        nargs="+",
+        metavar="QUERY",
+        help="time only these catalog queries with the same measure loop; "
+        "prints one JSON object and leaves BENCH_DETAIL.json untouched",
+    )
+    args = ap.parse_args(argv)
+
+    from wagtail_vector_index_spark.queries import ORACLE, QUERY_FNS
+
+    if args.only:
+        unknown = [name for name in args.only if name not in QUERY_FNS]
+        if unknown:
+            ap.error(f"unknown query: {', '.join(unknown)}")
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
     import duckdb
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("wvi-spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("wvi-spark-bench")
 
     from wagtail_vector_index_spark.catalog import _t
     from wagtail_vector_index_spark.operators.knn import gemm_topk_join
-    from wagtail_vector_index_spark.queries import ORACLE, QUERY_FNS
 
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "
         "documents embeddings"
     ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):  # a Spark-written table (tools/stage.py)
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
     # warm the JVM + python workers once (not counted)
     _t(spark, sf_dir, "lineitem").select(F.sum("l_quantity")).collect()
@@ -275,6 +311,11 @@ def main() -> None:
             if rec["duckdb_s"] > 0:
                 rec["ratio"] = round(rec["median_s"] / rec["duckdb_s"], 2)
         return rec
+
+    if args.only:
+        only = {name: measure(name) for name in args.only}
+        print(json.dumps({"queries": only, "sf": sf}, separators=(",", ":")))
+        return
 
     detail: dict[str, dict] = {}
     timings: dict[str, float] = {}
@@ -362,7 +403,7 @@ def main() -> None:
     # truncated ("parsed": null) because detail+added pushed the line
     # past the capture window. stdout gets one COMPACT line with the
     # contract fields only.
-    with open("/root/repo/BENCH_DETAIL.json", "w") as f:
+    with open(DETAIL_PATH, "w") as f:
         json.dump(
             {
                 "metric": "headline_queries_total_wall",

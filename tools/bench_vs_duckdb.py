@@ -13,31 +13,22 @@ Run: python tools/bench_vs_duckdb.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
+
+from bench import bench_session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from wagtail_vector_index_spark.session import build_session
-
-    spark = build_session(
-        "bench-vs-duckdb",
-        master="local[32]",
-        shuffle_partitions=32,
-        **{
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": "16g",
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.autoBroadcastJoinThreshold": "64m",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("bench-vs-duckdb")
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events "
@@ -95,7 +86,7 @@ def main() -> None:
     lines = [
         "# BENCH vs DuckDB baseline",
         "",
-        f"Steady-state wall-clock at {sf_dir} (best of 3; Spark local[32],",
+        f"Steady-state wall-clock at {sf_dir} (best of 3; Spark {spark.sparkContext.master},",
         "DuckDB single-node running the identical oracle SQL). Generated by",
         "tools/bench_vs_duckdb.py.",
         "",
@@ -140,13 +131,14 @@ def main() -> None:
         "not comparable across rounds without aligning the query set.",
     ]
     # preserve the per-round sections appended after the generated head
+    notes = os.path.join(REPO, "BENCH_NOTES.md")
     try:
-        prev = open("/root/repo/BENCH_NOTES.md").read()
+        prev = open(notes).read()
         cut = prev.find("\n## Round")
         tail = prev[cut:] if cut != -1 else ""
     except FileNotFoundError:
         tail = ""
-    with open("/root/repo/BENCH_NOTES.md", "w") as f:
+    with open(notes, "w") as f:
         f.write("\n".join(lines) + "\n" + tail)
     print("wrote BENCH_NOTES.md (round sections preserved)")
 

@@ -2,20 +2,24 @@
 query in Spark AND its DuckDB oracle at a given scale factor, compare
 row-count + sorted-column value multisets, and report per-query PASS/FAIL.
 
+Runs on bench.py's session (the engine's RECOMMENDED_CONF on
+local[$SPARK_GRAFT_CPUS]).
+
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
-from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_session  # noqa: E402
 from wagtail_vector_index_spark.queries import ORACLE, QUERY_FNS  # noqa: E402
 
 TABLES = (
@@ -46,14 +50,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("check-oracle")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -4,9 +4,8 @@ Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query — the r12
 optimization-round evidence files (plans/r12/<q>_before.txt /
-_after.txt). Uses the same session shape as bench.py so the captured
-plan matches what the bench executes (AQE on, broadcast threshold 64m,
-shuffle partitions = $SPARK_GRAFT_CPUS).
+_after.txt). Uses bench.py's session so the captured plan matches
+what the bench executes.
 """
 
 from __future__ import annotations
@@ -16,27 +15,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from bench import bench_session  # noqa: E402
 
 
 def main() -> None:
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.maxMetadataStringLength", "2000")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = bench_session(
+        "dump-plans", **{"spark.sql.maxMetadataStringLength": "2000"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from wagtail_vector_index_spark.queries import QUERY_FNS
 

@@ -2,34 +2,34 @@
 
 For each query: join strategies chosen, whether parquet filters were
 pushed down, read-schema width (column pruning), top-k strategy, and
-Python-stage count. Run: python tools/plan_report.py [sf_dir]
+Python-stage count, on bench.py's session (the plans the bench
+executes). Run: python tools/plan_report.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from pyspark.sql import SparkSession  # noqa: E402
+from bench import bench_session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # un-truncated ReadSchema/PushedFilters in plan strings — the
-        # default 100-char metadata cap made the scan-cols column count
-        # tree-drawing characters swallowed by the regex (r3 verdict #5)
-        .config("spark.sql.maxMetadataStringLength", "100000")
-        .config("spark.sql.debug.maxToStringFields", "10000")
-        .getOrCreate()
+    # un-truncated ReadSchema/PushedFilters in plan strings — the
+    # default 100-char metadata cap made the scan-cols column count
+    # tree-drawing characters swallowed by the regex (r3 verdict #5)
+    spark = bench_session(
+        "plan-report",
+        **{
+            "spark.sql.maxMetadataStringLength": "100000",
+            "spark.sql.debug.maxToStringFields": "10000",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from wagtail_vector_index_spark.queries import QUERY_FNS
 
@@ -100,7 +100,7 @@ def main() -> None:
             f"| {name} | {', '.join(joins) or '—'} | {pushdown} | {scan_cols} | {topk} | {py} |"
         )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines) - 8} queries)")
 

@@ -73,7 +73,7 @@ def _assign_exprs(columns: list[str], vec_col: str):
     expression trees keyed by NAME, so one build serves every Lloyd
     round — the per-round Python tree construction was ~20% of
     train_codebook's measured wall (plan_build 1.1s of 4.9s warm,
-    tools/profile_kmeans_r13.py)."""
+    OPTIMIZATION_r13.md Batch 2)."""
     from wagtail_vector_index_spark.functions.vector import (
         dot_product,
         l2_norm,
@@ -168,7 +168,7 @@ def train_codebook(
     )
     centroids = [(i, [float(x) for x in r[0]]) for i, r in enumerate(init)]
 
-    # r13 (profile-driven, tools/profile_kmeans_r13.py: warm 5-round
+    # r13 (profile-driven, OPTIMIZATION_r13.md Batch 2: warm 5-round
     # training = plan_build 1.1s + collect 3.7s; execution data is
     # k x dim doubles — plan work dominated): the assignment Column
     # trees build ONCE (they reference the matrix frame's columns by

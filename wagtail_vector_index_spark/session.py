@@ -1,10 +1,26 @@
 """Tuned SparkSession factory.
 
-One place for the engine's recommended configuration — AQE with
-coalescing and skew-join handling, UTC session time, Arrow batch sizing
-for the external-call stages, dynamic partition overwrite for the
-document store, and a small-file split size so single-file inputs still
-parallelize. Every knob is runtime-overridable via ``overrides``.
+One place for the engine's Spark configuration — the config `bench.py`
+measures and every tool, stager and the user-flow benchmark run on. It
+sets AQE with coalescing and skew-join handling, UTC session time,
+dynamic partition overwrite for the document store, parquet filter
+pushdown, and three values the bench has measured since its first
+round:
+
+- ``autoBroadcastJoinThreshold`` 64m: dimension tables, codebooks and
+  probe sets up to 64 MB broadcast instead of paying a sort-merge
+  shuffle (Spark's default is 10m);
+- ``files.maxPartitionBytes`` 4m: a small-file split size, so a
+  single-file input still fans out across cores. Spark splits a scan at
+  ``min(maxPartitionBytes, max(openCostInBytes = 4m, bytes / cores))``,
+  where ``bytes`` counts each file plus a 4m open cost, so this only
+  changes scans of more than 4 MB per core by that count;
+- ``arrow.maxRecordsPerBatch`` 20000: the Arrow batch handed to the
+  external-call stages (embedding, pandas UDFs).
+
+Callers pass only deployment settings (master, shuffle partitions,
+driver memory, UI, display limits) through ``overrides``; every key is
+still runtime-overridable there.
 """
 
 from __future__ import annotations
@@ -17,8 +33,9 @@ RECOMMENDED_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
-    "spark.sql.files.maxPartitionBytes": "128m",
+    "spark.sql.autoBroadcastJoinThreshold": "64m",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+    "spark.sql.files.maxPartitionBytes": "4m",
     "spark.sql.parquet.filterPushdown": "true",
 }
 
