@@ -11,6 +11,7 @@ import os
 import subprocess
 import sys
 
+import duckdb
 import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -138,9 +139,27 @@ def test_stage_replicas_doubles_rows_with_disjoint_keys(sf_dir, tmp_path):
         assert rest(copies[0]) == rest(copies[1]), table
 
     # tables the recipe does not scale are copied unchanged
-    for table in ("region", "nation", "supplier", "part"):
+    for table in ("region", "nation"):
         src = pq.read_table(f"{sf_dir}/{table}.parquet")
         assert pq.read_table(str(out / f"{table}.parquet")).equals(src)
+
+    # foreign keys shift with the keys they reference, so every lineitem
+    # row still joins its order, part and supplier
+    con = duckdb.connect()
+    for table in ("lineitem", "orders", "part", "supplier"):
+        path = out / f"{table}.parquet"
+        glob = f"{path}/*.parquet" if path.is_dir() else str(path)
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{glob}'")
+    n_lineitem = con.execute("SELECT count(*) FROM lineitem").fetchone()[0]
+    for fk, table, key in (
+        ("l_orderkey", "orders", "o_orderkey"),
+        ("l_partkey", "part", "p_partkey"),
+        ("l_suppkey", "supplier", "s_suppkey"),
+    ):
+        joined = con.execute(
+            f"SELECT count(*) FROM lineitem JOIN {table} ON {fk} = {key}"
+        ).fetchone()[0]
+        assert joined == n_lineitem, (fk, joined, n_lineitem)
 
     # the staged dir is a complete sf-dir that bench.py --only can time
     env["SPARK_GRAFT_SF_DIR"] = str(out)

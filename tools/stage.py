@@ -16,9 +16,10 @@ Recipes (``size`` and its default in brackets):
 - ``replicas`` [copies, 10]: ``size`` key-shifted copies of the
   SHIFTS tables. Copy i adds ``i * step`` to each key column, so every
   copy's keys are disjoint from the others while the non-key columns
-  repeat exactly: distinct users, vectors, orders and docs all grow
-  ``size``-fold, and the co-purchase graph becomes ``size`` disjoint
-  copies instead of one denser graph.
+  repeat exactly: distinct users, vectors, orders, parts, suppliers and
+  docs all grow ``size``-fold, every key join matches copy i to copy i
+  (so join output grows ``size``-fold too), and the co-purchase graph
+  becomes ``size`` disjoint copies instead of one denser graph.
 - ``zipf`` [docs, 5000]: a Zipfian corpus the shape of real text (30k
   word types, s = 1.1, lognormal lengths around 90 tokens) with a fixed
   2% planted ~10%-mutated near-dup rate. Shingle sharing stays rare at
@@ -75,12 +76,16 @@ TABLES = (
 ).split()
 
 # Per-copy key offsets of the replicas recipe, sized for sf0.1's key
-# ranges (staging raises if a source key reaches its step).
+# ranges (staging raises if a source key reaches its step). A foreign
+# key shifts by the same step as the key it references, so copy i of
+# lineitem joins copy i of orders, part and supplier.
 SHIFTS = {
     "events": {"event_id": 100_000_000, "user_id": 10_000_000},
     "embeddings": {"vec_id": 1_000_000},
     "orders": {"o_orderkey": 10_000_000, "o_custkey": 1_000_000},
     "customer": {"c_custkey": 1_000_000},
+    "part": {"p_partkey": 1_000_000},
+    "supplier": {"s_suppkey": 1_000_000},
     "documents": {"doc_id": 1_000_000},
     "lineitem": {
         "l_orderkey": 10_000_000,

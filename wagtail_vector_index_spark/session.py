@@ -4,19 +4,20 @@ One place for the engine's Spark configuration — the config `bench.py`
 measures and every tool, stager and the user-flow benchmark run on. It
 sets AQE with coalescing and skew-join handling, UTC session time,
 dynamic partition overwrite for the document store, parquet filter
-pushdown, and three values the bench has measured since its first
-round:
+pushdown, and:
 
 - ``autoBroadcastJoinThreshold`` 64m: dimension tables, codebooks and
   probe sets up to 64 MB broadcast instead of paying a sort-merge
-  shuffle (Spark's default is 10m);
-- ``files.maxPartitionBytes`` 4m: a small-file split size, so a
-  single-file input still fans out across cores. Spark splits a scan at
+  shuffle (Spark's default is 10m). This is the one value here that
+  changes the plans the bench executes;
+- ``files.maxPartitionBytes`` 128m (Spark's default): a scan splits at
   ``min(maxPartitionBytes, max(openCostInBytes = 4m, bytes / cores))``,
-  where ``bytes`` counts each file plus a 4m open cost, so this only
-  changes scans of more than 4 MB per core by that count;
-- ``arrow.maxRecordsPerBatch`` 20000: the Arrow batch handed to the
-  external-call stages (embedding, pandas UDFs).
+  so small inputs already split down to 4 MB pieces, while large inputs
+  split no finer than a 128 MB parquet row group;
+- ``arrow.maxRecordsPerBatch`` 10000 (Spark's default): the Arrow batch
+  handed to the external-call stages (embedding, pandas UDFs), and so
+  the size of one embedding request when ``request_batch_size`` is
+  unset.
 
 Callers pass only deployment settings (master, shuffle partitions,
 driver memory, UI, display limits) through ``overrides``; every key is
@@ -34,8 +35,8 @@ RECOMMENDED_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
-    "spark.sql.files.maxPartitionBytes": "4m",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+    "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.parquet.filterPushdown": "true",
 }
 
