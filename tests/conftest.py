@@ -9,23 +9,25 @@ import pytest
 # allow running pytest from any cwd (the repo root is not installed as a
 # package; worker-import regressions only surface when cwd != repo root)
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from pyspark.sql import SparkSession
+from wagtail_vector_index_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("wvi-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="wvi_wh_"))
-        .getOrCreate()
+    # the shipped engine config (session.RECOMMENDED_CONF), so plan tests
+    # check the plans the engine actually runs; only deployment settings
+    # differ
+    session = build_session(
+        "wvi-spark-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        **{
+            "spark.driver.memory": "4g",
+            "spark.ui.enabled": "false",
+            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="wvi_wh_"),
+        },
     )
     yield session
     session.stop()

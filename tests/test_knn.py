@@ -687,10 +687,46 @@ def test_hard_negative_topk_rejects_unknown_engine(spark):
         )
 
 
+def test_hard_negative_topk_block_mixed_id_types(spark):
+    """A string-id anchor frame against a long-id corpus: the block
+    engine carries anchor and index ids in separate columns, so it
+    returns exactly the broadcast engine's rows, string anchor ids
+    included."""
+    from wagtail_vector_index_spark.operators.knn import hard_negative_topk
+
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet"
+    ).select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+    anchors = emb.where(F.col("vec_id") % 5 == 0).select(
+        F.concat(F.lit("q:"), F.col("vec_id").cast("string")).alias("vec_id"),
+        "label",
+        "v",
+    )
+    kw = dict(
+        anchors=anchors, id_col="vec_id", vec_col="v", label_col="label",
+        limit=2,
+    )
+    bro = {
+        (r["anchor_id"], r["vec_id"]): round(r["similarity"], 9)
+        for r in hard_negative_topk(emb, engine="broadcast", **kw).collect()
+    }
+    blk = {
+        (r["anchor_id"], r["vec_id"]): round(r["similarity"], 9)
+        for r in hard_negative_topk(
+            emb, engine="block", blocks=3, **kw
+        ).collect()
+    }
+    assert blk == bro and len(blk) > 0
+    assert all(isinstance(a, str) and isinstance(i, int) for a, i in blk)
+
+
 def test_gemm_topk_chunked_kernel_matches_unchunked(monkeypatch):
-    """_gemm_topk must be invariant to the sims-slab budget: a 1-cell
-    slab (maximal chunking) and an unbounded slab give identical top-k,
-    threshold, and label-mask results — the bounded slab is a memory
+    """_gemm_topk and the pair kernel (_cosine_pairs, _pair_losers) must
+    be invariant to the sims-slab budget: a 1-cell slab (maximal
+    chunking) and an unbounded slab give identical top-k, threshold,
+    label-mask, pair and loser results — the bounded slab is a memory
     shape, never a semantic one."""
     import numpy as np
 
@@ -705,25 +741,67 @@ def test_gemm_topk_chunked_kernel_matches_unchunked(monkeypatch):
     p_ids = np.arange(100, 111)
     m_labels = rng.integers(0, 3, size=23)
     p_labels = rng.integers(0, 3, size=11)
-    cases = [
-        dict(threshold=None),
-        dict(threshold=0.3),
-        dict(m_labels=m_labels, p_labels=p_labels),
+    # diagonal mode on unsorted ids, plus an all-zero row (id 99)
+    shuffled = rng.permutation(23)
+    diagonal = [(shuffled, M)]
+    cross = [(ids, M), (p_ids, P)]
+    with_zero = [
+        (np.append(shuffled, 99), knn._unit_rows(np.vstack([M, np.zeros(6)])))
     ]
-    def triples(out):
-        return {
+
+    def topk(**kw):
+        return lambda: {
             (int(p), int(i), round(float(s), 12))
-            for p, i, s in zip(*out)
+            for p, i, s in zip(*knn._gemm_topk(ids, M, p_ids, P, 4, **kw))
         }
 
-    for kw in cases:
-        wide = triples(knn._gemm_topk(ids, M, p_ids, P, 4, **kw))
+    def pairs(sides, thr):
+        return lambda: {
+            (int(lo), int(hi), round(float(s), 12))
+            for slab in knn._cosine_pairs(sides, thr)
+            for lo, hi, s in zip(*slab)
+        }
+
+    def losers(sides, thr):
+        return lambda: {int(x) for x in knn._pair_losers(sides, thr)}
+
+    cases = {
+        "topk": topk(threshold=None),
+        "topk threshold": topk(threshold=0.3),
+        "topk labels": topk(m_labels=m_labels, p_labels=p_labels),
+        "pairs diagonal": pairs(diagonal, 0.3),
+        "pairs cross": pairs(cross, 0.3),
+        "pairs diagonal zero row": pairs(with_zero, 0.2),
+        "losers diagonal": losers(diagonal, 0.3),
+        "losers cross": losers(cross, 0.3),
+    }
+    for name, run in cases.items():
+        wide = run()
         monkeypatch.setattr(knn, "_SIMS_SLAB_DOUBLES", 1)
-        tiny = triples(knn._gemm_topk(ids, M, p_ids, P, 4, **kw))
+        tiny = run()
         monkeypatch.undo()
         # row order may differ across chunkings; the pair set (what the
         # downstream Window consumes) must not
-        assert tiny == wide and len(wide) > 0, kw
+        assert tiny == wide and len(wide) > 0, name
+
+    # each qualifying pair comes out once, low id first; the losers are
+    # the pairs' higher ids
+    def brute(sides, thr):
+        (a_ids, A), (b_ids, B) = sides if len(sides) == 2 else sides * 2
+        return {
+            (min(a_ids[i], b_ids[j]), max(a_ids[i], b_ids[j]))
+            for i, j in zip(*np.nonzero(A @ B.T >= thr))
+            if a_ids[i] != b_ids[j]
+        }
+
+    for mode, sides in (("diagonal", diagonal), ("cross", cross)):
+        want = brute(sides, 0.3)
+        assert {(lo, hi) for lo, hi, _ in cases[f"pairs {mode}"]()} == want
+        assert cases[f"losers {mode}"]() == {hi for _, hi in want}
+    # a zero vector scores 0 against everything: no match above 0
+    zero_pairs = cases["pairs diagonal zero row"]()
+    assert all(99 not in (lo, hi) for lo, hi, _ in zero_pairs)
+    assert all(lo < hi for lo, hi, _ in zero_pairs)
 
 
 def test_auto_block_grid_scales_with_rows():

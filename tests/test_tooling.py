@@ -17,7 +17,6 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SESSION_BUILDERS = {
     os.path.join("wagtail_vector_index_spark", "session.py"),
-    os.path.join("tests", "conftest.py"),
 }
 
 
@@ -52,9 +51,10 @@ def _imported_modules(node) -> list[str]:
     return []
 
 
-def test_only_session_py_and_conftest_build_spark_sessions():
-    """Every tool, bench and stager goes through ``build_session`` (the
-    one tuned config); per-round staging modules stay deleted."""
+def test_only_session_py_builds_spark_sessions():
+    """Every tool, bench, stager and the pytest session go through
+    ``build_session`` (the one tuned config); per-round staging modules
+    stay deleted."""
     builders, staging_imports = [], []
     for rel, path in _python_files():
         with open(path) as f:

@@ -1812,8 +1812,9 @@ def block_neardup_pairs(
 
     Rows are hashed into ``blocks`` blocks; every unordered block pair
     (i <= j) becomes one group holding block i's rows (side a) and block
-    j's (side b), and each group runs one BLAS multiply emitting only the
-    pairs above threshold. Work is O(N²/B²) per group spread over B(B+1)/2
+    j's (side b), and each group runs the shared chunked pair kernel
+    (``knn._cosine_slabs``) emitting only the pairs above threshold.
+    Work is O(N²/B²) per group spread over B(B+1)/2
     groups; shuffle volume is ~B copies of each row — choose B ~ cluster
     width at 100 TB. Nothing ever collects to the driver, no side needs to
     broadcast, and the result is exactly the all-pairs answer (each
@@ -1825,37 +1826,18 @@ def block_neardup_pairs(
     group shuffle, measured ~2x faster than the join+union formulation
     which read the source twice.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    from wagtail_vector_index_spark.operators.knn import (
+        _block_group_sides,
+        _cosine_pairs,
+        _hash_block,
+        _pairs_frame,
+        _triangular_block_targets,
+    )
 
-    blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(blocks)).cast(
-        "int"
-    )
-    # side a of groups (blk, j) for j >= blk; side b of (i, blk) for i < blk
-    a_targets = F.transform(
-        F.sequence(F.col("blk"), F.lit(blocks - 1)),
-        lambda j: F.struct(
-            F.col("blk").alias("bi"),
-            j.cast("int").alias("bj"),
-            F.lit("a").alias("side"),
-        ),
-    )
-    b_targets = F.when(
-        F.col("blk") > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.col("blk") - 1),
-            lambda i: F.struct(
-                i.cast("int").alias("bi"),
-                F.col("blk").alias("bj"),
-                F.lit("b").alias("side"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<bi:int,bj:int,side:string>>"))
     union = (
         df.select(id_col, vec_col)
-        .withColumn("blk", blk)
-        .withColumn("t", F.explode(F.concat(a_targets, b_targets)))
+        .withColumn("blk", _hash_block(id_col, blocks))
+        .withColumn("t", _triangular_block_targets(F.col("blk"), F.lit(blocks)))
         .select("t.bi", "t.bj", F.col(id_col), F.col(vec_col), "t.side")
     )
 
@@ -1869,58 +1851,12 @@ def block_neardup_pairs(
     )
     thr = float(threshold)
 
-    empty = pd.DataFrame({"id_a": [], "id_b": [], sim_alias: []})
-
-    def _block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sims-slab budget shared with the knn GEMM engines: the multiply
-        # is chunked over the right operand's columns so per-task slab
-        # memory stays O(1) no matter how big the block pair is
-        from wagtail_vector_index_spark.operators.knn import (
-            _SIMS_SLAB_DOUBLES,
-        )
-
-        a = pdf[pdf["side"] == "a"]
-        b = pdf[pdf["side"] == "b"]
-        is_diagonal = int(pdf["bi"].iloc[0]) == int(pdf["bj"].iloc[0])
-        if not len(a) or (not is_diagonal and not len(b)):
-            return empty
-        ids_a = a[id_col].to_numpy()
-        Ma = np.array(a[vec_col].tolist(), dtype=np.float64)
-        Ma /= np.maximum(np.linalg.norm(Ma, axis=1, keepdims=True), 1e-300)
-        if is_diagonal:
-            ids_r, Mr = ids_a, Ma
-        else:
-            ids_r = b[id_col].to_numpy()
-            Mr = np.array(b[vec_col].tolist(), dtype=np.float64)
-            Mr /= np.maximum(np.linalg.norm(Mr, axis=1, keepdims=True), 1e-300)
-        n = Ma.shape[0]
-        chunk = max(1, _SIMS_SLAB_DOUBLES // max(n, 1))
-        los, his, valss = [], [], []
-        for s in range(0, Mr.shape[0], chunk):
-            e = min(s + chunk, Mr.shape[0])
-            sims = Ma @ Mr[s:e].T
-            ra, cb = np.where(sims >= thr)
-            xa, xb = ids_a[ra], ids_r[s + cb]
-            if is_diagonal:
-                # within-block: upper triangle of the self-product
-                keep = xa < xb
-                lo, hi = xa[keep], xb[keep]
-                vals = sims[ra[keep], cb[keep]]
-            else:
-                # cross between disjoint blocks: keep all, normalize order
-                swap = xa > xb
-                lo = np.where(swap, xb, xa)
-                hi = np.where(swap, xa, xb)
-                vals = sims[ra, cb]
-            los.append(lo)
-            his.append(hi)
-            valss.append(vals)
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(los),
-                "id_b": np.concatenate(his),
-                sim_alias: np.concatenate(valss),
-            }
+    def _block_pair(pdf):
+        # the pair kernel bounds each task's sims slab, however big the
+        # block pair
+        return _pairs_frame(
+            _cosine_pairs(_block_group_sides(pdf, id_col, vec_col), thr),
+            sim_alias,
         )
 
     return union.groupBy("bi", "bj").applyInPandas(_block_pair, schema=out_schema)
@@ -1986,7 +1922,6 @@ def lsh_neardup_pairs(
     sim_alias: str = "cos_sim",
     dim: int | None = None,
     max_bucket_rows: int | None = 4096,
-    skew_cache: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs via banded hyperplane-LSH candidates +
     exact-cosine verification — the sub-quadratic scale path.
@@ -2019,13 +1954,16 @@ def lsh_neardup_pairs(
     one bucket), so bucket counts (<= bands * 2^bits rows, one narrow
     agg) route oversized buckets through hash-block pair groups of at
     most cap^2 GEMM work. ``None`` skips the count pass and trusts the
-    data to be spread.
+    data to be spread. Per-task memory is bounded either way: the
+    bucket verify multiplies through the shared chunked pair kernel
+    (``knn._cosine_slabs``), one bounded sims slab at a time.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from wagtail_vector_index_spark.operators.knn import (
+        _block_group_sides,
+        _cosine_pairs,
+        _hash_block,
+        _pairs_frame,
+        _triangular_block_targets,
         hyperplane_lsh_planes,
         lsh_bucket_col,
     )
@@ -2081,19 +2019,18 @@ def lsh_neardup_pairs(
     if max_bucket_rows is not None:
         cap = int(max_bucket_rows)
         cache_key = None
-        if skew_cache:
-            # Data-version signal: the plan hash is the same before and
-            # after a same-path data refresh, so caching requires a
-            # file-listing fingerprint too (non-file inputs: no cache).
-            version = _data_version_fingerprint(df)
-            if version is not None:
-                try:
-                    cache_key = (
-                        df.semanticHash(), version, id_col, vec_col,
-                        int(num_planes), int(bands), cap,
-                    )
-                except Exception:  # plan not hashable
-                    cache_key = None
+        # Data-version signal: the plan hash is the same before and
+        # after a same-path data refresh, so caching requires a
+        # file-listing fingerprint too (non-file inputs: no cache).
+        version = _data_version_fingerprint(df)
+        if version is not None:
+            try:
+                cache_key = (
+                    df.semanticHash(), version, id_col, vec_col,
+                    int(num_planes), int(bands), cap,
+                )
+            except Exception:  # plan not hashable
+                cache_key = None
         if cache_key is not None and cache_key in _SKEW_VERDICT_CACHE:
             block_counts = dict(_SKEW_VERDICT_CACHE[cache_key])
         else:
@@ -2131,33 +2068,12 @@ def lsh_neardup_pairs(
         banded = (
             banded.join(F.broadcast(bdf), ["band_no", "band_val"], "left")
             .na.fill({"nb": 1})
+            .withColumn("blk", _hash_block(id_col, F.col("nb")))
             .withColumn(
-                "blk",
-                F.pmod(
-                    F.xxhash64(F.col(id_col).cast("string")), F.col("nb")
-                ).cast("int"),
+                "t", _triangular_block_targets(F.col("blk"), F.col("nb"))
             )
         )
-        a_targets = F.transform(
-            F.sequence(F.col("blk"), F.col("nb") - 1),
-            lambda j: F.struct(
-                F.col("blk").alias("bi"), j.cast("int").alias("bj"),
-                F.lit("a").alias("side"),
-            ),
-        )
-        b_targets = F.when(
-            F.col("blk") > 0,
-            F.transform(
-                F.sequence(F.lit(0), F.col("blk") - 1),
-                lambda i: F.struct(
-                    i.cast("int").alias("bi"), F.col("blk").alias("bj"),
-                    F.lit("b").alias("side"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<bi:int,bj:int,side:string>>"))
-        union = banded.withColumn(
-            "t", F.explode(F.concat(a_targets, b_targets))
-        ).select(
+        union = banded.select(
             "band_no", "band_val", "t.bi", "t.bj", F.col(id_col),
             F.col(vec_col), "t.side",
         )
@@ -2183,44 +2099,11 @@ def lsh_neardup_pairs(
         ]
     )
     thr = float(threshold)
-    empty = pd.DataFrame({"id_a": [], "id_b": [], sim_alias: []})
 
-    def _norm(frame: pd.DataFrame) -> "np.ndarray":
-        X = np.asarray(frame[vec_col].tolist(), dtype=np.float64)
-        return X / np.maximum(
-            np.sqrt((X * X).sum(axis=1, keepdims=True)), 1e-300
-        )
-
-    def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        diagonal = int(pdf["bi"].iloc[0]) == int(pdf["bj"].iloc[0])
-        a = pdf[pdf["side"] == "a"]
-        if diagonal:
-            if len(a) <= 1:
-                return empty
-            a = a.sort_values(id_col, kind="mergesort")
-            ids = a[id_col].to_numpy()
-            S = _norm(a) @ _norm(a).T
-            ra, cb = np.where(np.triu(S >= thr, k=1))
-            return pd.DataFrame(
-                {"id_a": ids[ra], "id_b": ids[cb], sim_alias: S[ra, cb]}
-            )
-        b = pdf[pdf["side"] == "b"]
-        if not len(a) or not len(b):
-            return empty
-        ids_a = a[id_col].to_numpy()
-        ids_b = b[id_col].to_numpy()
-        S = _norm(a) @ _norm(b).T
-        ra, cb = np.where(S >= thr)
-        if not len(ra):
-            return empty
-        xa, xb = ids_a[ra], ids_b[cb]
-        swap = xa > xb
-        return pd.DataFrame(
-            {
-                "id_a": np.where(swap, xb, xa),
-                "id_b": np.where(swap, xa, xb),
-                sim_alias: S[ra, cb],
-            }
+    def _bucket_pairs(pdf):
+        return _pairs_frame(
+            _cosine_pairs(_block_group_sides(pdf, id_col, vec_col), thr),
+            sim_alias,
         )
 
     # streamed_group_apply = same one-shuffle grouped verify, but the
@@ -2755,17 +2638,16 @@ def assign_centroids_udf(centroids: Sequence[tuple[int, Sequence[float]]]):
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from wagtail_vector_index_spark.operators.knn import _unit_rows
+
     cents = sorted(centroids, key=lambda t: int(t[0]))
     cids = np.asarray([c for c, _ in cents], dtype=np.int64)
-    C = np.asarray([[float(x) for x in v] for _, v in cents], dtype=np.float64)
-    Cn = C / np.sqrt((C * C).sum(axis=1, keepdims=True))
+    Cn = _unit_rows([[float(x) for x in v] for _, v in cents])
 
     def _assign(col):
         if len(col) == 0:
             return pd.Series([], dtype="int32")
-        X = np.asarray(col.tolist(), dtype=np.float64)
-        Xn = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
-        idx = (Xn @ Cn.T).argmax(axis=1)
+        idx = (_unit_rows(col.tolist()) @ Cn.T).argmax(axis=1)
         return pd.Series(cids[idx].astype(np.int32))
 
     _assign.__annotations__ = {"col": pd.Series, "return": pd.Series}
@@ -2789,9 +2671,14 @@ def _blocked_semantic_survivors(
     kernel because every within-cluster row pair lands in exactly one
     (cid, bi, bj) group and the loser rule (drop the higher id) is
     per-pair, not per-task."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
+
+    from wagtail_vector_index_spark.operators.knn import (
+        _block_group_sides,
+        _hash_block,
+        _pair_losers,
+        _triangular_block_targets,
+    )
 
     spark = assigned.sparkSession
     thr = float(threshold)
@@ -2799,71 +2686,20 @@ def _blocked_semantic_survivors(
     bdf = spark.createDataFrame(
         [(int(c), int(b)) for c, b in block_counts.items()], "cid int, nb int"
     )
-    rows = (
+    union = (
         assigned.join(F.broadcast(bdf), "cid", "left")
         .na.fill({"nb": 1})
-        .withColumn(
-            "blk",
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.col("nb")).cast(
-                "int"
-            ),
-        )
+        .withColumn("blk", _hash_block(id_col, F.col("nb")))
+        .withColumn("t", _triangular_block_targets(F.col("blk"), F.col("nb")))
+        .select("cid", "t.bi", "t.bj", F.col(id_col), F.col(vec_col), "t.side")
     )
-    a_targets = F.transform(
-        F.sequence(F.col("blk"), F.col("nb") - 1),
-        lambda j: F.struct(
-            F.col("blk").alias("bi"), j.cast("int").alias("bj"),
-            F.lit("a").alias("side"),
-        ),
-    )
-    b_targets = F.when(
-        F.col("blk") > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.col("blk") - 1),
-            lambda i: F.struct(
-                i.cast("int").alias("bi"), F.col("blk").alias("bj"),
-                F.lit("b").alias("side"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<bi:int,bj:int,side:string>>"))
-    union = rows.withColumn("t", F.explode(F.concat(a_targets, b_targets))).select(
-        "cid", "t.bi", "t.bj", F.col(id_col), F.col(vec_col), "t.side"
-    )
-
-    def _norm(frame: pd.DataFrame) -> "np.ndarray":
-        X = np.asarray(frame[vec_col].tolist(), dtype=np.float64)
-        # same 1e-300 floor as lsh_neardup_pairs._norm: all-zero vectors
-        # normalize to zero (never near-dup) without a divide warning —
-        # one explicit zero-vector policy across both semantic paths
-        nrm = np.maximum(
-            np.sqrt((X * X).sum(axis=1, keepdims=True)), 1e-300
-        )
-        return X / nrm
-
-    loser_schema = T.StructType([T.StructField(id_col, id_type)])
-    empty = pd.DataFrame({id_col: []})
 
     def _losers(pdf: pd.DataFrame) -> pd.DataFrame:
-        diagonal = int(pdf["bi"].iloc[0]) == int(pdf["bj"].iloc[0])
-        a = pdf[pdf["side"] == "a"]
-        if diagonal:
-            if len(a) <= 1:
-                return empty
-            a = a.sort_values(id_col, kind="mergesort")
-            S = _norm(a) @ _norm(a).T
-            loser = np.triu(S >= thr, k=1).any(axis=0)
-            return pd.DataFrame({id_col: a[id_col].to_numpy()[loser]})
-        b = pdf[pdf["side"] == "b"]
-        if not len(a) or not len(b):
-            return empty
-        ids_a = a[id_col].to_numpy()
-        ids_b = b[id_col].to_numpy()
-        ra, cb = np.where((_norm(a) @ _norm(b).T) >= thr)
-        if not len(ra):
-            return empty
-        hi = np.maximum(ids_a[ra], ids_b[cb])
-        return pd.DataFrame({id_col: pd.unique(hi)})
+        return pd.DataFrame(
+            {id_col: _pair_losers(_block_group_sides(pdf, id_col, vec_col), thr)}
+        )
 
+    loser_schema = T.StructType([T.StructField(id_col, id_type)])
     losers = (
         union.groupBy("cid", "bi", "bj")
         .applyInPandas(_losers, schema=loser_schema)
@@ -2890,10 +2726,13 @@ def semantic_dedup(
     ``method="arrow"`` (default) is the scale path: assignment is a
     zero-shuffle Arrow map (:func:`assign_centroids_udf`), then ONE hash
     exchange on the cluster id feeds a per-cluster numpy GEMM inside
-    ``applyInPandas`` that computes the pairwise block, marks every id
-    with a smaller-id neighbor >= threshold, and emits survivors
-    directly — no self-join, no aggregate barrier, no anti-join. The
-    quadratic stays bounded per cluster (the SemDeDup point).
+    ``applyInPandas`` (the shared chunked pair kernel,
+    ``knn._cosine_slabs``: one bounded sims slab at a time, upper
+    triangle only) that marks every id with a smaller-id neighbor >=
+    threshold and emits survivors directly — no self-join, no aggregate
+    barrier, no anti-join. The quadratic stays bounded per cluster (the
+    SemDeDup point). All-zero vectors normalize to zero (cosine 0), so
+    at ``threshold <= 0`` they match like any other row.
 
     **Skew guard** (``max_cluster_rows``): a skewed mega-cluster would
     send one O(n²) GEMM into a single task, so the arrow path first
@@ -2920,7 +2759,6 @@ def semantic_dedup(
     ).select(F.col(id_col), F.col(vec_col), F.col("cid"))
 
     if method == "arrow":
-        import numpy as np
         import pandas as pd
 
         if max_cluster_rows is not None:
@@ -2953,21 +2791,19 @@ def semantic_dedup(
                     threshold=threshold,
                 )
 
+        from wagtail_vector_index_spark.operators.knn import (
+            _pair_losers,
+            _unit_rows,
+        )
+
         id_type = df.schema[id_col].dataType.simpleString()
         thr = float(threshold)
 
         def _survivors(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(id_col, kind="mergesort")
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            if len(X) <= 1:
-                return pdf[[id_col, "cid"]]
-            Xn = X / np.sqrt((X * X).sum(axis=1, keepdims=True))
-            S = Xn @ Xn.T
-            # loser[j]: some i<j has sim >= threshold. Threshold BEFORE
-            # triu: triu zero-fills the lower triangle, and for thr <= 0
-            # those structural zeros would count as matches.
-            loser = np.triu(S >= thr, k=1).any(axis=0)
-            return pdf[[id_col, "cid"]].iloc[np.flatnonzero(~loser)]
+            # a member loses iff some lower-id member is >= threshold
+            sides = [(pdf[id_col].to_numpy(), _unit_rows(pdf[vec_col].tolist()))]
+            losers = _pair_losers(sides, thr)
+            return pdf.loc[~pdf[id_col].isin(losers), [id_col, "cid"]]
 
         return assigned.groupBy("cid").applyInPandas(
             _survivors, schema=f"{id_col} {id_type}, cid int"

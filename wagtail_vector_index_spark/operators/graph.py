@@ -70,7 +70,6 @@ def pagerank(
     iterations: int = 5,
     damping: float = 0.85,
     round_decimals: int | None = None,
-    checkpoint_edges: bool = True,
     dangling: str = "drop",
     mass_round_decimals: int = 6,
     teleport: DataFrame | None = None,
@@ -120,11 +119,9 @@ def pagerank(
       every round's contribution join shuffles only the (small) rank
       table to the edges' layout — the edge list, the 100 TB side,
       never moves again. (On a real cluster with unreliable executors,
-      set a checkpoint dir and swap in ``checkpoint()``;
-      ``checkpoint_edges=False`` restores the fully-lazy single-DAG
-      form.) Per-round rank checkpoints were measured ~2x SLOWER
-      (materialization jobs dominate these small frames) — rounds stay
-      one lazy DAG.
+      set a checkpoint dir and swap in ``checkpoint()``.) Per-round
+      rank checkpoints were measured ~2x SLOWER (materialization jobs
+      dominate these small frames) — rounds stay one lazy DAG.
     - out-degrees are folded into the partitioned edge frame up front,
       removing one join per round.
     - the node count is a driver scalar (one count job), removing the
@@ -141,8 +138,7 @@ def pagerank(
     edges = edges.select(
         F.col(src).alias("__e_src"), F.col(dst).alias("__e_dst")
     )
-    if checkpoint_edges:
-        edges = edges.repartition("__e_src").localCheckpoint(eager=True)
+    edges = edges.repartition("__e_src").localCheckpoint(eager=True)
     nodes = (
         edges.select(F.col("__e_src").alias("node"))
         .unionByName(edges.select(F.col("__e_dst").alias("node")))
@@ -152,21 +148,18 @@ def pagerank(
         F.count(F.lit(1)).cast("double").alias("__deg")
     )
     edges = edges.join(outdeg, "__e_src")
-    if checkpoint_edges:
-        # r12: materialize the DEGREE-ANNOTATED frame too. The agg and
-        # the join are exchange-free over the src-partitioned blocks,
-        # but left lazy they re-ran INSIDE EVERY ROUND's plan — five
-        # full passes over the edge frame (the 100 TB side) that the
-        # docstring's "folded in up front" always intended to pay once.
-        # Same for the node roster: its union+distinct subtree is
-        # referenced by every round's update (and ReuseExchange stops
-        # deduplicating it once mid-loop checkpoints split the plan).
-        # LogicalRDD preserves the HashPartitioning either way.
-        edges = edges.localCheckpoint(eager=True)
-        nodes = nodes.localCheckpoint(eager=True)
-        src_keys = edges.select(F.col("__e_src").alias("node")).distinct()
-    else:
-        src_keys = outdeg.select(F.col("__e_src").alias("node"))
+    # r12: materialize the DEGREE-ANNOTATED frame too. The agg and
+    # the join are exchange-free over the src-partitioned blocks,
+    # but left lazy they re-ran INSIDE EVERY ROUND's plan — five
+    # full passes over the edge frame (the 100 TB side) that the
+    # docstring's "folded in up front" always intended to pay once.
+    # Same for the node roster: its union+distinct subtree is
+    # referenced by every round's update (and ReuseExchange stops
+    # deduplicating it once mid-loop checkpoints split the plan).
+    # LogicalRDD preserves the HashPartitioning either way.
+    edges = edges.localCheckpoint(eager=True)
+    nodes = nodes.localCheckpoint(eager=True)
+    src_keys = edges.select(F.col("__e_src").alias("node")).distinct()
     n = float(nodes.count())
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("pr"))
@@ -201,15 +194,14 @@ def pagerank(
             .otherwise(F.lit(0.0))
             .alias("__tele"),
         )
-        if checkpoint_edges:
-            # r12: materialize the ANNOTATED roster. Left lazy, the
-            # broadcast join + teleport projection re-ran inside every
-            # round's base join (the same per-round re-derivation the
-            # degree-annotated edge frame fix removed); the frame is
-            # (node, double) — tiny at any scale. Measured sf0.1:
-            # seeded 7.9s -> ~5s, closing most of its gap over the
-            # uniform variant (4.7s).
-            nodes = nodes.localCheckpoint(eager=True)
+        # r12: materialize the ANNOTATED roster. Left lazy, the
+        # broadcast join + teleport projection re-ran inside every
+        # round's base join (the same per-round re-derivation the
+        # degree-annotated edge frame fix removed); the frame is
+        # (node, double) — tiny at any scale. Measured sf0.1:
+        # seeded 7.9s -> ~5s, closing most of its gap over the
+        # uniform variant (4.7s).
+        nodes = nodes.localCheckpoint(eager=True)
         restart = F.lit(1.0 - d) * F.col("__tele")
         ranks = nodes.select("node", F.col("__tele").alias("pr"))
     else:
@@ -352,7 +344,6 @@ def kcore(
     dst: str = "dst",
     k: int = 2,
     rounds: int = 6,
-    checkpoint_every: int = 2,
     broadcast_filter: bool = False,
 ) -> DataFrame:
     """k-core peel (Seidman 1983; the distributed fixed-point form of
@@ -370,10 +361,10 @@ def kcore(
     (deletions only), so extra rounds past convergence are no-ops.
     Per round: one degree agg + two semi-join filters, all node-keyed
     shuffles on a frame that only SHRINKS. The remaining-edge frame is
-    eagerly localCheckpointed every ``checkpoint_every`` rounds: each
+    eagerly localCheckpointed every second round: each
     round references the previous frame three times (degree agg + both
     endpoint filters), so the lazy plan tree grows 3x per round and a
-    bounded cadence caps it at 3^cadence subtree copies — the same
+    cadence of 2 caps it at 3^2 subtree copies — the same
     bounded-lazy tradeoff measured for the dangling-PageRank loop
     (per-round eager materialization dominated; see pagerank notes).
     On a real cluster swap localCheckpoint for checkpoint()."""
@@ -421,7 +412,7 @@ def kcore(
         sym = sym.join(
             keep, F.col("u") == F.col("__keep"), "left_semi"
         ).join(keep, F.col("v") == F.col("__keep"), "left_semi")
-        if (i + 1) % int(checkpoint_every) == 0 and i + 1 < int(rounds):
+        if (i + 1) % 2 == 0 and i + 1 < int(rounds):
             sym = sym.localCheckpoint(eager=True)
     return sym.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")

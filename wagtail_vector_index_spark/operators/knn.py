@@ -27,7 +27,7 @@ from __future__ import annotations
 from collections.abc import Iterator, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,7 +73,6 @@ def similarity_join(
     similarity_threshold: float = 0.0,
     method: str = "cosine",
     sim_alias: str = "similarity",
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Top-k join: for every probe row, the k most-similar index rows.
 
@@ -83,11 +82,11 @@ def similarity_join(
     probe table. For probe sets too big to broadcast, use
     :func:`gemm_topk_join`.
     """
-    p = probes_df.select(
-        F.col(probe_id), F.col(probe_vec).cast("array<double>").alias(probe_vec)
+    p = F.broadcast(
+        probes_df.select(
+            F.col(probe_id), F.col(probe_vec).cast("array<double>").alias(probe_vec)
+        )
     )
-    if broadcast_probes:
-        p = F.broadcast(p)
     joined = index_df.join(
         p, F.array_size(F.col(index_vec)) == F.array_size(F.col(probe_vec)), "inner"
     ).withColumn(sim_alias, similarity_col(F.col(index_vec), F.col(probe_vec), method))
@@ -529,13 +528,14 @@ def lsh_topk(
     )
 
 
-# Per-GEMM sims-slab budget, in float64 cells (~32 MB). Every GEMM kernel
-# below chunks its multiply over probe COLUMNS so the (n_index x n_probes)
-# similarity slab never materializes whole: peak kernel memory is the two
-# unit-vector blocks plus one bounded slab, O(rows + slab), regardless of
-# group or probe-set size. Without this the slab is quadratic in group
-# size (rows_p*rows_i/blocks^2 for the block engine; batch_rows*n_probes
-# for the broadcast engine) — the executor-OOM shape at 100 TB.
+# Per-GEMM sims-slab budget, in float64 cells (~32 MB). Every cosine GEMM
+# kernel below (top-k and pair) chunks its multiply over the right-hand
+# operand's rows so the similarity slab never materializes whole: peak
+# kernel memory is the two unit-vector blocks plus one bounded slab,
+# O(rows + slab), regardless of group or probe-set size. Without this the
+# slab is quadratic in group size (rows_p*rows_i/blocks^2 for the block
+# engine; batch_rows*n_probes for the broadcast engine; bucket/cluster
+# rows^2 for the dedup groups) — the executor-OOM shape at 100 TB.
 _SIMS_SLAB_DOUBLES = 4_000_000
 
 # Target per-side rows per (probe-block, index-block) group for the
@@ -543,6 +543,15 @@ _SIMS_SLAB_DOUBLES = 4_000_000
 # vectors per side per task at embedding widths, well under executor
 # memory; the sims slab is bounded separately (above).
 _BLOCK_TARGET_ROWS = 65_536
+
+
+def _unit_rows(X) -> np.ndarray:
+    """Rows of ``X`` as float64 unit vectors — the one normalizer of every
+    cosine kernel. The norm is floored at 1e-300, so an all-zero row
+    stays zero (cosine 0 against everything) instead of dividing by
+    zero."""
+    X = np.asarray(X, dtype=np.float64)
+    return X / np.maximum(np.sqrt((X * X).sum(axis=1, keepdims=True)), 1e-300)
 
 
 def _gemm_topk(
@@ -595,6 +604,126 @@ def _gemm_topk(
         np.concatenate([o[1] for o in outs]),
         np.concatenate([o[2] for o in outs]),
     )
+
+
+def _cosine_slabs(sides, threshold: float) -> Iterator[tuple]:
+    """Shared chunked pair kernel over one or two ``(ids, unit_rows)``
+    sides: yields ``(row_ids, col_ids, sims, hit)`` one sims slab at a
+    time, multiplying at most ``_SIMS_SLAB_DOUBLES`` cells at a time;
+    ``hit`` marks the pairs with cosine ``>= threshold``.
+
+    Diagonal mode (one side): pairs within it. The rows are sorted by
+    id and ``hit`` is cut to the strict upper triangle, so every hit has
+    the lower id on its row, and the slab for columns ``[s, e)`` only
+    multiplies rows ``[0, e)`` — half the flops of the square. Cross
+    mode (two sides): every pair across them. Ids are assumed unique
+    within a side. No side, or a single-row diagonal, yields nothing."""
+    if not sides or (len(sides) == 1 and len(sides[0][0]) < 2):
+        return
+    diagonal = len(sides) == 1
+    ids, unit = sides[0]
+    if diagonal:
+        order = np.argsort(ids, kind="stable")
+        ids, unit = ids[order], unit[order]
+        ids_b, unit_b = ids, unit
+    else:
+        ids_b, unit_b = sides[1]
+    chunk = max(1, _SIMS_SLAB_DOUBLES // max(unit.shape[0], 1))
+    for s in range(0, unit_b.shape[0], chunk):
+        e = min(s + chunk, unit_b.shape[0])
+        rows = e if diagonal else unit.shape[0]
+        sims = unit[:rows] @ unit_b[s:e].T
+        hit = sims >= threshold
+        if diagonal:
+            hit[s:e] = np.triu(hit[s:e], k=1)
+        yield ids[:rows], ids_b[s:e], sims, hit
+
+
+def _cosine_pairs(
+    sides, threshold: float
+) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Every pair the pair kernel hits, one slab at a time, as 1-D
+    ``(lo, hi, sim)`` arrays with ``lo < hi`` (ids)."""
+    for row_ids, col_ids, sims, hit in _cosine_slabs(sides, threshold):
+        ra, cb = np.nonzero(hit)
+        xa, xb = row_ids[ra], col_ids[cb]
+        swap = xa > xb
+        yield np.where(swap, xb, xa), np.where(swap, xa, xb), sims[ra, cb]
+
+
+def _pair_losers(sides, threshold: float) -> np.ndarray:
+    """Distinct higher ids over the pairs the pair kernel hits — the
+    rows drop-the-higher-id dedup removes — reduced slab by slab. A
+    diagonal hit's column holds the higher id, so there a column
+    ``any`` replaces materializing the pairs: measured ~4x faster than
+    gathering every pair of a 2,000-row cluster whose rows all match."""
+    his = []
+    for row_ids, col_ids, _, hit in _cosine_slabs(sides, threshold):
+        if len(sides) == 1:
+            his.append(col_ids[hit.any(axis=0)])
+        else:
+            ra, cb = np.nonzero(hit)
+            his.append(np.unique(np.maximum(row_ids[ra], col_ids[cb])))
+    return np.unique(np.concatenate(his)) if his else np.array([], dtype=object)
+
+
+def _block_group_sides(pdf, id_col: str, vec_col: str) -> list:
+    """Pair-kernel sides of one (bi, bj) group laid out by
+    :func:`_triangular_block_targets`: a diagonal group pairs its
+    side-'a' rows among themselves, any other group pairs side 'a'
+    against side 'b'; a group with an empty side has nothing to pair."""
+    sides = [pdf[pdf["side"] == "a"]]
+    if int(pdf["bi"].iloc[0]) != int(pdf["bj"].iloc[0]):
+        sides.append(pdf[pdf["side"] == "b"])
+    if not all(len(side) for side in sides):
+        return []
+    return [
+        (side[id_col].to_numpy(), _unit_rows(side[vec_col].tolist()))
+        for side in sides
+    ]
+
+
+def _pairs_frame(pairs, sim_alias: str):
+    """:func:`_cosine_pairs` output as one ``(id_a, id_b, sim_alias)``
+    frame."""
+    import pandas as pd
+
+    pairs = list(pairs)
+    if not pairs:
+        return pd.DataFrame({"id_a": [], "id_b": [], sim_alias: []})
+    lo, hi, sim = (np.concatenate(c) for c in zip(*pairs))
+    return pd.DataFrame({"id_a": lo, "id_b": hi, sim_alias: sim})
+
+
+def _hash_block(id_col: str, n) -> Column:
+    """Block of a row: its id's xxhash64 modulo ``n`` (an int or an int
+    column)."""
+    return F.pmod(F.xxhash64(F.col(id_col).cast("string")), n).cast("int")
+
+
+def _triangular_block_targets(blk: Column, nb: Column) -> Column:
+    """Explode a row of block ``blk`` (of ``nb`` blocks) into its
+    ``(bi, bj, side)`` block-pair groups: side 'a' of ``(blk, j)`` for
+    every ``j >= blk`` and side 'b' of ``(i, blk)`` for every ``i < blk``.
+    Every unordered pair of rows then meets in exactly one group — the
+    diagonal group ``(blk, blk)`` for two rows of one block — at the
+    cost of ``nb`` copies of each row."""
+    a = F.transform(
+        F.sequence(blk, nb - 1),
+        lambda j: F.struct(
+            blk.alias("bi"), j.cast("int").alias("bj"), F.lit("a").alias("side")
+        ),
+    )
+    b = F.when(
+        blk > 0,
+        F.transform(
+            F.sequence(F.lit(0), blk - 1),
+            lambda i: F.struct(
+                i.cast("int").alias("bi"), blk.alias("bj"), F.lit("b").alias("side")
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<bi:int,bj:int,side:string>>"))
+    return F.explode(F.concat(a, b))
 
 
 def _auto_block_grid(
@@ -670,8 +799,7 @@ def gemm_topk_join(
       index-block) pair is one grouped-Arrow task running the same GEMM
       and emitting its local per-probe top-k. Per-group row memory is
       O(rows/blocks) on each side and the sims slab is bounded by the
-      chunked kernel (``_gemm_topk``) — the corpus-as-probes 100 TB path
-      (same shape as ``hard_negative_topk``'s block engine).
+      chunked kernel (``_gemm_topk``) — the corpus-as-probes 100 TB path.
 
     ``engine="auto"`` (default) bounds-counts the probe side
     (``limit(max_broadcast_rows+1).count()`` — never a full scan) and
@@ -682,7 +810,45 @@ def gemm_topk_join(
     row counts (per-side blocks = ceil(rows/65536), grown to >= 2x
     cluster parallelism tasks), so the grid scales with the data instead
     of a fixed constant; an int pins a square grid exactly.
+
+    :func:`hard_negative_topk` runs on these same two engines, with a
+    label column on each side masking same-label pairs.
     """
+    return _gemm_topk_engines(
+        probes_df,
+        index_df,
+        probe_id=probe_id,
+        probe_vec=probe_vec,
+        index_id=index_id,
+        index_vec=index_vec,
+        limit=limit,
+        similarity_threshold=similarity_threshold,
+        sim_alias=sim_alias,
+        engine=engine,
+        blocks=blocks,
+        max_broadcast_rows=max_broadcast_rows,
+    )
+
+
+def _gemm_topk_engines(
+    probes_df: DataFrame,
+    index_df: DataFrame,
+    *,
+    probe_id: str,
+    probe_vec: str,
+    index_id: str,
+    index_vec: str,
+    limit: int,
+    similarity_threshold: float,
+    sim_alias: str,
+    engine: str,
+    blocks: int | str,
+    max_broadcast_rows: int,
+    labels: tuple[str, str] | None = None,
+) -> DataFrame:
+    """:func:`gemm_topk_join`'s engines. ``labels`` names a (probe,
+    index) pair of label columns; same-label pairs are then masked out
+    inside ``_gemm_topk`` (hard-negative mining)."""
     if engine not in ("auto", "broadcast", "block"):
         raise ValueError(f"unknown engine {engine!r}")
     # id columns keep their source types (doc keys are strings, vec ids are
@@ -715,10 +881,10 @@ def gemm_topk_join(
             index_vec=index_vec,
             limit=int(limit),
             similarity_threshold=float(similarity_threshold),
-            sim_alias=sim_alias,
             probe_blocks=pb,
             index_blocks=ib,
             out_schema=out_schema,
+            labels=labels,
         )
         return (
             candidates.withColumn("__rank", F.row_number().over(w))
@@ -726,41 +892,45 @@ def gemm_topk_join(
             .drop("__rank")
         )
 
-    probe_rows = probes_df.select(probe_id, probe_vec).collect()
+    p_label, i_label = labels or (None, None)
+    probe_rows = probes_df.select(
+        probe_id, probe_vec, *([p_label] if labels else [])
+    ).collect()
     if not probe_rows:
         return probes_df.sparkSession.createDataFrame([], out_schema)
     probe_ids = np.array([r[0] for r in probe_rows])
-    P = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    P_unit = P / np.maximum(np.linalg.norm(P, axis=1, keepdims=True), 1e-300)
+    P_unit = _unit_rows([r[1] for r in probe_rows])
+    probe_labels = np.array([r[2] for r in probe_rows]) if labels else None
     sc = probes_df.sparkSession.sparkContext
-    bc = sc.broadcast((probe_ids, P_unit))
+    bc = sc.broadcast((probe_ids, P_unit, probe_labels))
 
-    dim = P.shape[1]
+    dim = P_unit.shape[1]
     k = limit
     threshold = float(similarity_threshold)
 
     def _partition_topk(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        p_ids, p_unit = bc.value
+        p_ids, p_unit, p_labels = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[index_id].to_numpy()
-            M = np.array(pdf[index_vec].tolist(), dtype=np.float64)
-            if M.shape[1] != dim:
+            M_unit = _unit_rows(pdf[index_vec].tolist())
+            if M_unit.shape[1] != dim:
                 continue
-            M_unit = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
             rows_probe, rows_index, rows_sim = _gemm_topk(
-                ids, M_unit, p_ids, p_unit, k, threshold=threshold
+                ids, M_unit, p_ids, p_unit, k, threshold=threshold,
+                m_labels=pdf[i_label].to_numpy() if labels else None,
+                p_labels=p_labels,
             )
             yield pd.DataFrame(
                 {probe_id: rows_probe, index_id: rows_index, sim_alias: rows_sim}
             )
 
-    candidates = index_df.select(index_id, index_vec).mapInPandas(
-        _partition_topk, schema=out_schema
-    )
+    candidates = index_df.select(
+        index_id, index_vec, *([i_label] if labels else [])
+    ).mapInPandas(_partition_topk, schema=out_schema)
     return (
         candidates.withColumn("__rank", F.row_number().over(w))
         .where(F.col("__rank") <= limit)
@@ -778,115 +948,75 @@ def _block_topk_candidates(
     index_vec: str,
     limit: int,
     similarity_threshold: float,
-    sim_alias: str,
     probe_blocks: int,
     index_blocks: int,
     out_schema: T.StructType,
+    labels: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """Blocked GEMM top-k candidates (unlabeled twin of
-    :func:`_hard_negative_block_candidates`): probes hashed into
-    ``probe_blocks`` blocks and replicated once per index block, index
-    rows hashed into ``index_blocks`` and replicated once per probe
-    block; each (gp, gi) group runs a chunked BLAS multiply
-    (``_gemm_topk`` — sims slab bounded) and emits its LOCAL per-probe
-    top-``limit`` — a superset of the global winners, cut exactly by the
-    caller's Window. No driver collect, no broadcast; per-group row
-    memory O(rows/blocks) on each side, slab memory O(1). Probe and
-    index id columns keep their own (possibly different) types — each
-    rides its own nullable column through the union."""
+    """Blocked GEMM top-k candidates: probes hashed into ``probe_blocks``
+    blocks and replicated once per index block, index rows hashed into
+    ``index_blocks`` and replicated once per probe block; each (gp, gi)
+    group runs a chunked BLAS multiply (``_gemm_topk`` — sims slab
+    bounded, same-label pairs masked when ``labels`` is given) and emits
+    its LOCAL per-probe top-``limit`` — a superset of the global winners,
+    cut exactly by the caller's Window. No driver collect, no broadcast;
+    per-group row memory O(rows/blocks) on each side, slab memory O(1).
+    Probe and index ids (and labels) keep their own, possibly different,
+    types — each side rides its own columns through the union, the other
+    side's read as null."""
     import pandas as pd
 
     pb = int(probe_blocks)
     ib = int(index_blocks)
     k = int(limit)
     threshold = float(similarity_threshold)
-    p_id_type = probes_df.schema[probe_id].dataType
-    i_id_type = index_df.schema[index_id].dataType
+    p_label, i_label = labels or (None, None)
 
-    probe_tagged = (
-        probes_df.select(
-            F.col(probe_id).alias("__pid"),
-            F.col(probe_vec).cast("array<double>").alias("__vec"),
-        )
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col("__pid").cast("string")), F.lit(pb)).cast("int"),
-        )
-        .withColumn(
-            "__t",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(ib - 1)),
-                    lambda j: F.struct(
-                        F.col("__blk").alias("gp"), j.cast("int").alias("gi")
-                    ),
-                )
-            ),
-        )
-        .select(
-            F.col("__t.gp").alias("gp"),
-            F.col("__t.gi").alias("gi"),
-            F.col("__pid"),
-            F.lit(None).cast(i_id_type).alias("__iid"),
-            F.col("__vec"),
-            F.lit("p").alias("side"),
-        )
+    def _tagged(src, side, id_c, vec_c, label_c, own_blocks, other_blocks):
+        # a row of block blk on its own side meets every block of the other
+        blk = _hash_block(id_c, own_blocks)
+        fan = F.explode(F.sequence(F.lit(0), F.lit(other_blocks - 1)))
+        gp, gi = (blk, fan) if side == "p" else (fan, blk)
+        cols = [
+            gp.alias("gp"),
+            gi.alias("gi"),
+            F.col(id_c).alias(f"__{side}id"),
+            F.col(vec_c).cast("array<double>").alias("__vec"),
+            F.lit(side).alias("side"),
+        ]
+        if label_c:
+            cols.append(F.col(label_c).alias(f"__{side}label"))
+        return src.select(*cols)
+
+    union = _tagged(probes_df, "p", probe_id, probe_vec, p_label, pb, ib).unionByName(
+        _tagged(index_df, "i", index_id, index_vec, i_label, ib, pb),
+        allowMissingColumns=True,
     )
-    index_tagged = (
-        index_df.select(
-            F.col(index_id).alias("__iid"),
-            F.col(index_vec).cast("array<double>").alias("__vec"),
-        )
-        .withColumn(
-            "__blk",
-            F.pmod(F.xxhash64(F.col("__iid").cast("string")), F.lit(ib)).cast("int"),
-        )
-        .withColumn(
-            "__t",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(pb - 1)),
-                    lambda i: F.struct(
-                        i.cast("int").alias("gp"), F.col("__blk").alias("gi")
-                    ),
-                )
-            ),
-        )
-        .select(
-            F.col("__t.gp").alias("gp"),
-            F.col("__t.gi").alias("gi"),
-            F.lit(None).cast(p_id_type).alias("__pid"),
-            F.col("__iid"),
-            F.col("__vec"),
-            F.lit("i").alias("side"),
-        )
-    )
-    union = probe_tagged.unionByName(index_tagged)
-    empty = pd.DataFrame({probe_id: [], index_id: [], sim_alias: []})
+    names = out_schema.names
+    empty = pd.DataFrame({n: [] for n in names})
 
     def _block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         p = pdf[pdf["side"] == "p"]
         idx = pdf[pdf["side"] == "i"]
         if not len(p) or not len(idx):
             return empty
-        p_ids = p["__pid"].to_numpy()
-        A = np.array(p["__vec"].tolist(), dtype=np.float64)
-        dim = A.shape[1]
+        A = _unit_rows(p["__vec"].tolist())
         # mirror the broadcast engine's dim guard: index rows whose
         # dimensionality differs from the probes are excluded, per row
-        idx = idx[idx["__vec"].map(len) == dim]
+        idx = idx[idx["__vec"].map(len) == A.shape[1]]
         if not len(idx):
             return empty
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        ids = idx["__iid"].to_numpy()
-        M = np.array(idx["__vec"].tolist(), dtype=np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-        rows_probe, rows_index, rows_sim = _gemm_topk(
-            ids, M, p_ids, A, k, threshold=threshold
+        rows = _gemm_topk(
+            idx["__iid"].to_numpy(),
+            _unit_rows(idx["__vec"].tolist()),
+            p["__pid"].to_numpy(),
+            A,
+            k,
+            threshold=threshold,
+            m_labels=idx["__ilabel"].to_numpy() if labels else None,
+            p_labels=p["__plabel"].to_numpy() if labels else None,
         )
-        return pd.DataFrame(
-            {probe_id: rows_probe, index_id: rows_index, sim_alias: rows_sim}
-        )
+        return pd.DataFrame(dict(zip(names, rows)))
 
     return union.groupBy("gp", "gi").applyInPandas(_block_pair, schema=out_schema)
 
@@ -909,232 +1039,40 @@ def hard_negative_topk(
     hard-negative mining for contrastive training (FaceNet/DPR).
     ``anchors`` defaults to ``df`` itself (corpus-as-anchors); pass a
     separate DataFrame (same three columns) to mine negatives for a
-    query/train set against a larger corpus.
+    query/train set against a larger corpus. Returns
+    ``(anchor_id, id_col, sim_alias)``.
 
-    Two physical engines, identical semantics and tie order
-    (similarity desc, id asc via the shared final Window):
-
-    - ``engine="broadcast"``: the (ids, labels, unit-vectors) anchor
-      block collects once and broadcasts; each index partition does a
-      single label-MASKED BLAS multiply (same-label entries forced
-      below the cosine floor before the per-partition argpartition).
-      Shuffle O(partitions x anchors x k), independent of index size —
-      the right plan while the anchor set fits the driver.
-    - ``engine="block"``: NOTHING collects. Each side hashes into its
-      own block count (``blocks="auto"`` derives both from row counts,
-      an int pins a square grid); every (anchor-block, index-block) pair
-      is one ``applyInPandas`` group running the same masked GEMM —
-      chunked, so the sims slab is bounded — and emitting its local
-      per-anchor top-k. Per-group row memory is O(rows/blocks), shuffle
-      ~blocks copies of each side. This is the corpus-as-anchors 100 TB
-      path (the ``block_neardup_pairs`` pattern, operators/dedup.py).
-
-    ``engine="auto"`` (default) bounds-counts the anchor side
-    (``limit(max_broadcast_rows+1).count()`` — never a full scan of a
-    corpus-sized anchor set) and picks broadcast iff it is at most
-    ``max_broadcast_rows``.
+    Runs on :func:`gemm_topk_join`'s two engines with the anchors as
+    probes: each GEMM slab forces same-label entries below the cosine
+    floor before the top-k cut, so they never rank. ``engine``,
+    ``blocks`` and ``max_broadcast_rows`` mean what they mean there —
+    ``"broadcast"`` collects the anchor block once (shuffle
+    O(partitions x anchors x k), independent of index size),
+    ``"block"`` collects nothing (the corpus-as-anchors 100 TB path),
+    ``"auto"`` bounds-counts the anchor side and picks broadcast iff it
+    is at most ``max_broadcast_rows``. Both engines share the
+    (similarity desc, id asc) tie order, and anchor ids may have a
+    different type than the index ids on either engine.
     """
-    if engine not in ("auto", "broadcast", "block"):
-        raise ValueError(f"unknown engine {engine!r}")
     anchor_src = df if anchors is None else anchors
-    anchor_df = anchor_src.select(id_col, label_col, vec_col)
-    # anchor_id takes the ANCHOR frame's id type — it may differ from the
-    # index frame's (e.g. string query ids against long corpus ids)
-    out_schema = T.StructType(
-        [
-            T.StructField("anchor_id", anchor_src.schema[id_col].dataType),
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField(sim_alias, T.DoubleType()),
-        ]
-    )
-    if engine == "auto":
-        cutoff = int(max_broadcast_rows)
-        engine = (
-            "broadcast"
-            if anchor_df.limit(cutoff + 1).count() <= cutoff
-            else "block"
-        )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col(sim_alias).desc(), F.col(id_col).asc()
-    )
-    if engine == "block":
-        # the blocked union shares one id column across both sides; a
-        # mixed-type anchor frame would coerce silently — fail loud
-        # (the broadcast engine handles mixed types; see out_schema)
-        if (
-            anchor_src.schema[id_col].dataType
-            != df.schema[id_col].dataType
-        ):
-            raise ValueError(
-                "engine='block' requires the anchor frame's id column "
-                f"type ({anchor_src.schema[id_col].dataType.simpleString()}) "
-                f"to match the index frame's "
-                f"({df.schema[id_col].dataType.simpleString()}); use "
-                "engine='broadcast' for mixed-type anchor sets"
-            )
-        pb, ib = _resolve_block_grid(blocks, anchor_df, df)
-        candidates = _hard_negative_block_candidates(
-            df,
-            anchor_df,
-            id_col=id_col,
-            label_col=label_col,
-            vec_col=vec_col,
-            limit=int(limit),
-            sim_alias=sim_alias,
-            anchor_blocks=pb,
-            index_blocks=ib,
-            out_schema=out_schema,
-        )
-        return (
-            candidates.withColumn("__rank", F.row_number().over(w))
-            .where(F.col("__rank") <= limit)
-            .drop("__rank")
-        )
-    rows = anchor_df.collect()
-    if not rows:
-        return df.sparkSession.createDataFrame([], out_schema)
-    a_ids = np.array([r[0] for r in rows])
-    a_labels = np.array([r[1] for r in rows])
-    A = np.array([r[2] for r in rows], dtype=np.float64)
-    A_unit = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-    bc = df.sparkSession.sparkContext.broadcast((a_ids, a_labels, A_unit))
-    dim = A.shape[1]
-    k = limit
-
-    def _masked_topk(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        p_ids, p_labels, p_unit = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            labels = pdf[label_col].to_numpy()
-            M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if M.shape[1] != dim:
-                continue
-            M_unit = M / np.maximum(
-                np.linalg.norm(M, axis=1, keepdims=True), 1e-300
-            )
-            # same-label pairs masked below the cosine floor inside the
-            # chunked kernel so they can never enter a top-k
-            rows_anchor, rows_index, rows_sim = _gemm_topk(
-                ids, M_unit, p_ids, p_unit, k,
-                m_labels=labels, p_labels=p_labels,
-            )
-            yield pd.DataFrame(
-                {
-                    "anchor_id": rows_anchor,
-                    id_col: rows_index,
-                    sim_alias: rows_sim,
-                }
-            )
-
-    candidates = df.select(id_col, label_col, vec_col).mapInPandas(
-        _masked_topk, schema=out_schema
-    )
-    return (
-        candidates.withColumn("__rank", F.row_number().over(w))
-        .where(F.col("__rank") <= limit)
-        .drop("__rank")
-    )
-
-
-def _hard_negative_block_candidates(
-    df: DataFrame,
-    anchor_df: DataFrame,
-    *,
-    id_col: str,
-    label_col: str,
-    vec_col: str,
-    limit: int,
-    sim_alias: str,
-    anchor_blocks: int,
-    index_blocks: int,
-    out_schema: T.StructType,
-) -> DataFrame:
-    """Blocked label-masked GEMM candidates: anchors hashed into
-    ``anchor_blocks`` blocks and replicated once per index block, index
-    rows hashed into ``index_blocks`` and replicated once per anchor
-    block; each (ga, gi) group runs a chunked masked BLAS multiply
-    (``_gemm_topk`` — sims slab bounded) and emits its LOCAL per-anchor
-    top-``limit`` — a superset of the global winners, cut exactly by
-    the caller's Window. No driver collect, no broadcast; per-group row
-    memory O(rows/blocks) on each side, slab memory O(1)."""
-    import pandas as pd
-
-    ab = int(anchor_blocks)
-    ib = int(index_blocks)
-    k = int(limit)
-
-    def _tagged(src: DataFrame, side: str) -> DataFrame:
-        if side == "a":
-            # anchor block ga is the row's own hash; meet every gi
-            blk = F.pmod(
-                F.xxhash64(F.col(id_col).cast("string")), F.lit(ab)
-            ).cast("int")
-            tgt = F.transform(
-                F.sequence(F.lit(0), F.lit(ib - 1)),
-                lambda j: F.struct(
-                    F.col("__blk").alias("ga"), j.cast("int").alias("gi")
-                ),
-            )
-        else:
-            # index block gi is the row's own hash; meet every ga
-            blk = F.pmod(
-                F.xxhash64(F.col(id_col).cast("string")), F.lit(ib)
-            ).cast("int")
-            tgt = F.transform(
-                F.sequence(F.lit(0), F.lit(ab - 1)),
-                lambda i: F.struct(
-                    i.cast("int").alias("ga"), F.col("__blk").alias("gi")
-                ),
-            )
-        return (
-            src.select(id_col, label_col, vec_col)
-            .withColumn("__blk", blk)
-            .withColumn("__t", F.explode(tgt))
-            .select(
-                F.col("__t.ga").alias("ga"),
-                F.col("__t.gi").alias("gi"),
-                F.col(id_col),
-                F.col(label_col),
-                F.col(vec_col),
-                F.lit(side).alias("side"),
-            )
-        )
-
-    union = _tagged(anchor_df, "a").unionByName(_tagged(df, "b"))
-    empty = pd.DataFrame(
-        {"anchor_id": [], id_col: [], sim_alias: []}
-    )
-
-    def _block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = pdf[pdf["side"] == "a"]
-        idx = pdf[pdf["side"] == "b"]
-        if not len(a) or not len(idx):
-            return empty
-        p_ids = a[id_col].to_numpy()
-        p_labels = a[label_col].to_numpy()
-        A = np.array(a[vec_col].tolist(), dtype=np.float64)
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        ids = idx[id_col].to_numpy()
-        labels = idx[label_col].to_numpy()
-        M = np.array(idx[vec_col].tolist(), dtype=np.float64)
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-        rows_anchor, rows_index, rows_sim = _gemm_topk(
-            ids, M, p_ids, A, k, m_labels=labels, p_labels=p_labels
-        )
-        return pd.DataFrame(
-            {
-                "anchor_id": rows_anchor,
-                id_col: rows_index,
-                sim_alias: rows_sim,
-            }
-        )
-
-    return union.groupBy("ga", "gi").applyInPandas(
-        _block_pair, schema=out_schema
+    return _gemm_topk_engines(
+        anchor_src.select(
+            F.col(id_col).alias("anchor_id"),
+            F.col(vec_col).alias("__avec"),
+            F.col(label_col).alias("__alabel"),
+        ),
+        df,
+        probe_id="anchor_id",
+        probe_vec="__avec",
+        index_id=id_col,
+        index_vec=vec_col,
+        limit=limit,
+        similarity_threshold=0.0,
+        sim_alias=sim_alias,
+        engine=engine,
+        blocks=blocks,
+        max_broadcast_rows=max_broadcast_rows,
+        labels=("__alabel", label_col),
     )
 
 
