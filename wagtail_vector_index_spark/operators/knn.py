@@ -617,8 +617,8 @@ def _cosine_slabs(sides, threshold: float) -> Iterator[tuple]:
     the lower id on its row, and the slab for columns ``[s, e)`` only
     multiplies rows ``[0, e)`` — half the flops of the square. Cross
     mode (two sides): every pair across them. Ids are assumed unique
-    within a side. No side, or a single-row diagonal, yields nothing."""
-    if not sides or (len(sides) == 1 and len(sides[0][0]) < 2):
+    within a side. No side yields nothing."""
+    if not sides:
         return
     diagonal = len(sides) == 1
     ids, unit = sides[0]
