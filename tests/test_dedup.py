@@ -98,22 +98,28 @@ def test_block_neardup_matches_gemm(spark, embeddings_df):
     )
 
     emb = embeddings_df.limit(300)
-    blocked = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in block_neardup_pairs(
-            emb, id_col="vec_id", vec_col="embedding", threshold=0.3, blocks=5
-        ).collect()
-    }
-    gemm = {
-        (r["id_a"], r["id_b"]): r["cos_sim"]
-        for r in gemm_neardup_pairs(
-            emb, id_col="vec_id", vec_col="embedding", threshold=0.3
-        ).collect()
-    }
-    assert set(blocked) == set(gemm)
-    for k in blocked:
-        assert blocked[k] == pytest.approx(gemm[k], abs=1e-12)
-    assert all(a < b for a, b in blocked)
+    # string ids too: both paths keep the id column's type as it arrives
+    str_emb = emb.select(
+        F.format_string("v%05d", "vec_id").alias("vec_id"), "embedding"
+    )
+    for frame in (emb, str_emb):
+        blocked = {
+            (r["id_a"], r["id_b"]): r["cos_sim"]
+            for r in block_neardup_pairs(
+                frame, id_col="vec_id", vec_col="embedding", threshold=0.3,
+                blocks=5,
+            ).collect()
+        }
+        gemm = {
+            (r["id_a"], r["id_b"]): r["cos_sim"]
+            for r in gemm_neardup_pairs(
+                frame, id_col="vec_id", vec_col="embedding", threshold=0.3
+            ).collect()
+        }
+        assert blocked and set(blocked) == set(gemm)
+        for k in blocked:
+            assert blocked[k] == pytest.approx(gemm[k], abs=1e-12)
+        assert all(a < b for a, b in blocked)
 
 
 def test_lsh_neardup_subset_of_exact(spark, embeddings_df):
@@ -305,29 +311,6 @@ def test_connected_components_structural_probe_zero_rounds(spark):
         for r in connected_components(loops, stats=stats).collect()
     }
     assert got == {1: 1, 2: 1, 9: 9}
-
-
-def test_connected_components_fixed_rounds_probeless(spark):
-    """fixed_rounds (r6): probeless star execution must match the
-    signature-probed default when the budget covers convergence, run
-    exactly the requested rounds, and reject the label algorithm."""
-    import pytest
-
-    from wagtail_vector_index_spark.operators.dedup import connected_components
-
-    chain = [(i, i + 1) for i in range(63)]
-    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    stats: dict = {}
-    fixed = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            pairs, algorithm="star", fixed_rounds=8, stats=stats
-        ).collect()
-    }
-    assert fixed == {i: 0 for i in range(64)}
-    assert stats["rounds"] == 8
-    with pytest.raises(ValueError, match="fixed_rounds"):
-        connected_components(pairs, algorithm="label", fixed_rounds=4)
 
 
 def test_connected_components_star_matches_label_on_mixed_graph(spark):
@@ -908,6 +891,7 @@ def test_prefix_jaccard_exact_threshold_boundary(spark):
     |B|=11 ⇒ J = 11/20 = 0.55; the epsilon-robust ceiling must keep
     it, matching the co-count path's >= t contract."""
     from wagtail_vector_index_spark.operators.dedup import (
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_prefix,
     )
@@ -928,6 +912,23 @@ def test_prefix_jaccard_exact_threshold_boundary(spark):
     }
     assert want == {(1, 2): 0.55}
     assert got == want
+    # the containment prefix kernel shares the ranking and ceiling: 11
+    # of doc 3's 20 shingles occur in doc 4, so C(3 in 4) = 0.55 exactly
+    df = spark.createDataFrame(
+        [(3, " ".join(words)), (4, " ".join(words[:11] + ["x0", "x1"]))],
+        "doc_id long, text string",
+    )
+    by_method = {
+        m: {
+            (r["contained"], r["container"]): round(r["containment"], 9)
+            for r in ngram_containment_pairs(
+                df, n=1, threshold=0.55, method=m
+            ).collect()
+        }
+        for m in ("cocount", "prefix")
+    }
+    assert by_method["cocount"][(3, 4)] == 0.55
+    assert by_method["prefix"] == by_method["cocount"]
 
 
 def test_prefix_jaccard_property_random_docs(spark):
@@ -1842,6 +1843,7 @@ def test_containment_prefix_matches_cocount(spark):
         (5, "the the the the the the"),
         (6, "intro words then the cat sat on the mat near the door by "
             "the house today and a long tail of extra commentary text"),
+        (7, "too short"),  # no 3-gram: an empty shingle set pairs nothing
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for t in (0.6, 0.8, 1.0):

@@ -32,7 +32,7 @@ import logging
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -124,13 +124,7 @@ def _exploded_shingles(shingled: DataFrame, id_col: str) -> DataFrame:
         sizes.select(
             id_col, "n_sh", explode_nofilter(F.col("shingles")).alias("__shs")
         )
-        .select(
-            id_col,
-            "n_sh",
-            F.conv(F.substring(F.sha2(F.col("__shs"), 256), 1, 15), 16, 10)
-            .cast("long")
-            .alias("sh"),
-        )
+        .select(id_col, "n_sh", sha_hash60(F.col("__shs")).alias("sh"))
         .cache()
     )
 
@@ -450,6 +444,16 @@ def remove_duplicated_spans(
     return out.drop("__poss", "__nt")
 
 
+def _shingled(
+    df: DataFrame, *, id_col: str, text_col: str, n: int
+) -> DataFrame:
+    """(id, shingles): the word-``n``-gram shingle sets every shingle
+    path starts from, after the single-split parallelism guard."""
+    return _ensure_parallelism(df, id_col).select(
+        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -466,11 +470,11 @@ def ngram_jaccard_pairs(
     (identical output; identical-set collapse + ``method="auto"``
     hot-shingle routing) or :func:`ngram_dup_cluster_edges` when only
     connectivity is needed downstream."""
-    df = _ensure_parallelism(df, id_col)
-    shingled = df.select(
-        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
+    return _exact_jaccard_pairs(
+        _shingled(df, id_col=id_col, text_col=text_col, n=n),
+        id_col=id_col,
+        threshold=threshold,
     )
-    return _exact_jaccard_pairs(shingled, id_col=id_col, threshold=threshold)
 
 
 def _shingle_set_groups(
@@ -499,9 +503,7 @@ def _shingle_set_groups(
     set, carrying the representative's shingle array for the rep-grain
     pair join (picked up via min_by in the same agg — no join-back
     pass)."""
-    shingled = _ensure_parallelism(df, id_col).select(
-        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
-    )
+    shingled = _shingled(df, id_col=id_col, text_col=text_col, n=n)
     hashed = shingled.select(
         id_col,
         "shingles",
@@ -683,6 +685,97 @@ def _resolve_pair_method(
     return chosen, groups
 
 
+def _collapsed_rep_pairs(
+    df: DataFrame,
+    *,
+    family: str,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    method: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse -> route -> representative pairs, shared by the collapsed
+    pair generators: identical shingle sets collapse to one
+    representative (:func:`_shingle_set_groups`), ``method`` resolves on
+    the representatives' sets (:func:`_resolve_pair_method`), and the
+    family's co-count or prefix kernel pairs the representatives —
+    ``family="jaccard"`` gives canonical (id_a, id_b, jaccard) rows,
+    ``"containment"`` directed (contained, container, containment) rows.
+    Returns ``(member_reps, rep_pairs)``, member_reps = (id, __rep)
+    mapping every document to its group's representative."""
+    members, groups = _shingle_set_groups(
+        df, id_col=id_col, text_col=text_col, n=n
+    )
+    method, groups = _resolve_pair_method(method, groups, family=family)
+    if family == "containment":
+        cocount, prefix = _cocount_containment_pairs, _prefix_containment_pairs
+    else:
+        cocount, prefix = _exact_jaccard_pairs, _prefix_jaccard_pairs
+    kernel = prefix if method == "prefix" else cocount
+    reps = groups.select(F.col("__rep").alias(id_col), "shingles")
+    member_reps = members.join(groups.select("__g", "__rep"), "__g").select(
+        F.col(id_col), F.col("__rep")
+    )
+    return member_reps, kernel(reps, id_col=id_col, threshold=threshold)
+
+
+def _expand_rep_pairs(
+    member_reps: DataFrame,
+    rep_pairs: DataFrame,
+    *,
+    id_col: str,
+    threshold: float,
+    directed: bool,
+) -> DataFrame:
+    """Expand :func:`_collapsed_rep_pairs` output back to every member
+    pair — exact, because identical sets score identically: cross-group
+    pairs inherit their representative pair's value, within-group pairs
+    score 1.0 by construction. Undirected (Jaccard) rows come out
+    canonical (``least``/``greatest``, ``<`` within a group); directed
+    (containment) rows keep their orientation and take every ordered
+    ``!=`` pair within a group.
+
+    The member -> representative map is lazily localCheckpointed: FOUR
+    consumers below (both expansion sides of the cross pairs + both
+    sides of the within-group self-join), and without the barrier each
+    consumer re-runs the full text-scan -> shingle -> sha-of-sorted-set
+    pass that feeds it — measured ~5.2s of the dedup_jaccard_exact
+    gate's 5.9s at sf0.1 (the pair join itself is 0.66s). The
+    materialized frame is two columns, linear in corpus size; blocks are
+    reclaimed by the ContextCleaner when the frame drops."""
+    a, b, value = (
+        ("contained", "container", "containment")
+        if directed
+        else ("id_a", "id_b", "jaccard")
+    )
+    mg = member_reps.localCheckpoint(eager=False)
+    xa, xb = F.col("__xa"), F.col("__xb")
+    cross = (
+        rep_pairs.join(
+            mg.select(F.col("__rep").alias(a), F.col(id_col).alias("__xa")), a
+        )
+        .join(
+            mg.select(F.col("__rep").alias(b), F.col(id_col).alias("__xb")), b
+        )
+        .select(
+            (xa if directed else F.least(xa, xb)).alias(a),
+            (xb if directed else F.greatest(xa, xb)).alias(b),
+            value,
+        )
+    )
+    if float(threshold) > 1.0:  # identical sets (value 1.0) don't qualify
+        return cross
+    l, r = mg.alias("l"), mg.alias("r")
+    la, rb = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    within = (
+        l.join(r, F.col("l.__rep") == F.col("r.__rep"))
+        .where(la != rb if directed else la < rb)
+        .select(la.alias(a), rb.alias(b), F.lit(1.0).alias(value))
+    )
+    return cross.unionByName(within)
+
+
 def ngram_jaccard_pairs_collapsed(
     df: DataFrame,
     *,
@@ -720,65 +813,14 @@ def ngram_jaccard_pairs_collapsed(
     DataFrame-CONSTRUCTION time — pin the method for pure-lazy
     composition; decisions are observable via
     :func:`last_pair_route_decisions`."""
-    members, groups = _shingle_set_groups(
-        df, id_col=id_col, text_col=text_col, n=n
+    member_reps, rep_pairs = _collapsed_rep_pairs(
+        df, family="jaccard", id_col=id_col, text_col=text_col, n=n,
+        threshold=threshold, method=method,
     )
-    method, groups = _resolve_pair_method(method, groups)
-    reps = groups.select(F.col("__rep").alias(id_col), "shingles")
-    if method == "prefix":
-        rep_pairs = _prefix_jaccard_pairs(
-            reps, id_col=id_col, threshold=threshold
-        )
-    else:
-        rep_pairs = _exact_jaccard_pairs(
-            reps, id_col=id_col, threshold=threshold
-        )
-    # member -> representative map (narrow; one hash join on __g).
-    # Lazily localCheckpointed: FOUR consumers below (both expansion
-    # sides of the cross pairs + both sides of the within-group
-    # self-join), and without the barrier each consumer re-runs the
-    # full text-scan -> shingle -> sha-of-sorted-set pass that feeds
-    # `members` — measured ~5.2s of the dedup_jaccard_exact gate's
-    # 5.9s at sf0.1 (the pair join itself is 0.66s). The materialized
-    # frame is two columns, linear in corpus size; blocks are
-    # reclaimed by the ContextCleaner when the frame drops.
-    mg = (
-        members.join(groups.select("__g", "__rep"), "__g")
-        .select(F.col(id_col), F.col("__rep"))
-        .localCheckpoint(eager=False)
+    return _expand_rep_pairs(
+        member_reps, rep_pairs,
+        id_col=id_col, threshold=threshold, directed=False,
     )
-    cross = (
-        rep_pairs.join(
-            mg.select(
-                F.col("__rep").alias("id_a"), F.col(id_col).alias("__xa")
-            ),
-            "id_a",
-        )
-        .join(
-            mg.select(
-                F.col("__rep").alias("id_b"), F.col(id_col).alias("__xb")
-            ),
-            "id_b",
-        )
-        .select(
-            F.least("__xa", "__xb").alias("id_a"),
-            F.greatest("__xa", "__xb").alias("id_b"),
-            "jaccard",
-        )
-    )
-    if float(threshold) > 1.0:  # identical sets (J=1.0) don't qualify
-        return cross
-    l, r = mg.alias("l"), mg.alias("r")
-    within = (
-        l.join(r, F.col("l.__rep") == F.col("r.__rep"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 def ngram_dup_cluster_edges(
@@ -820,23 +862,14 @@ def ngram_dup_cluster_edges(
     NOTE: ``"auto"`` runs an EAGER Spark job at construction time
     (memoized per data version; see :func:`last_pair_route_decisions`)
     — pin the method for pure-lazy composition."""
-    members, groups = _shingle_set_groups(
-        df, id_col=id_col, text_col=text_col, n=n
+    member_reps, rep_pairs = _collapsed_rep_pairs(
+        df, family="jaccard", id_col=id_col, text_col=text_col, n=n,
+        threshold=threshold, method=method,
     )
-    method, groups = _resolve_pair_method(method, groups)
-    reps = groups.select(F.col("__rep").alias(id_col), "shingles")
-    if method == "prefix":
-        rep_pairs = _prefix_jaccard_pairs(
-            reps, id_col=id_col, threshold=threshold
-        ).select("id_a", "id_b")
-    else:
-        rep_pairs = _exact_jaccard_pairs(
-            reps, id_col=id_col, threshold=threshold
-        ).select("id_a", "id_b")
+    rep_pairs = rep_pairs.select("id_a", "id_b")
     if float(threshold) > 1.0:  # identical sets (J=1.0) don't qualify
         return rep_pairs
-    mg = members.join(groups.select("__g", "__rep"), "__g")
-    star = mg.where(F.col(id_col) != F.col("__rep")).select(
+    star = member_reps.where(F.col(id_col) != F.col("__rep")).select(
         F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b")
     )
     return rep_pairs.unionByName(star)
@@ -924,62 +957,14 @@ def ngram_containment_pairs(
     ``method="auto"`` runs an EAGER decision job at construction time
     (memoized per data version); pin the method for pure-lazy
     composition."""
-    members, groups = _shingle_set_groups(
-        df, id_col=id_col, text_col=text_col, n=n
+    member_reps, rep_pairs = _collapsed_rep_pairs(
+        df, family="containment", id_col=id_col, text_col=text_col, n=n,
+        threshold=threshold, method=method,
     )
-    method, groups = _resolve_pair_method(
-        method, groups, family="containment"
+    return _expand_rep_pairs(
+        member_reps, rep_pairs,
+        id_col=id_col, threshold=threshold, directed=True,
     )
-    reps = groups.select(F.col("__rep").alias(id_col), "shingles")
-    if method == "prefix":
-        rep_pairs = _prefix_containment_pairs(
-            reps, id_col=id_col, threshold=threshold
-        )
-    else:
-        rep_pairs = _cocount_containment_pairs(
-            reps, id_col=id_col, threshold=threshold
-        )
-    # member -> representative map; lazily localCheckpointed for the
-    # same four-consumer reason as ngram_jaccard_pairs_collapsed
-    mg = (
-        members.join(groups.select("__g", "__rep"), "__g")
-        .select(F.col(id_col), F.col("__rep"))
-        .localCheckpoint(eager=False)
-    )
-    cross = (
-        rep_pairs.join(
-            mg.select(
-                F.col("__rep").alias("contained"),
-                F.col(id_col).alias("__xa"),
-            ),
-            "contained",
-        )
-        .join(
-            mg.select(
-                F.col("__rep").alias("container"),
-                F.col(id_col).alias("__xb"),
-            ),
-            "container",
-        )
-        .select(
-            F.col("__xa").alias("contained"),
-            F.col("__xb").alias("container"),
-            "containment",
-        )
-    )
-    if float(threshold) > 1.0:  # identical sets (C=1.0) don't qualify
-        return cross
-    l, r = mg.alias("l"), mg.alias("r")
-    within = (
-        l.join(r, F.col("l.__rep") == F.col("r.__rep"))
-        .where(F.col(f"l.{id_col}") != F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("contained"),
-            F.col(f"r.{id_col}").alias("container"),
-            F.lit(1.0).alias("containment"),
-        )
-    )
-    return cross.unionByName(within)
 
 
 def _prefix_containment_pairs(
@@ -1009,54 +994,23 @@ def _prefix_containment_pairs(
     sound because a qualifying pair's first common shingle sits in the
     contained prefix — no shared shingle precedes it in either list —
     and always passes, same invariant note as the Jaccard kernel).
-    Survivors verify exactly on per-document sorted 60-bit-hash arrays;
-    same collision caveat as every hashed-shingle path here. Both
-    directions fall out of the one join because every document appears
-    on the contained side with its prefix AND on the container side in
-    full."""
+    Survivors verify exactly on the :func:`_shingle_hash60_frame`
+    arrays the ranking was exploded from; same collision caveat as
+    every hashed-shingle path here. Both directions fall out of the one
+    join because every document appears on the contained side with its
+    prefix AND on the container side in full."""
     t = float(threshold)
-    sized = shingled.select(
-        id_col, "shingles", F.size("shingles").alias("n_sh")
-    ).where(F.col("n_sh") > 0)
-    ex = (
-        sized.select(
-            id_col, "n_sh", explode_nofilter(F.col("shingles")).alias("__s")
-        )
-        .select(
-            id_col,
-            "n_sh",
-            F.conv(F.substring(F.sha2(F.col("__s"), 256), 1, 15), 16, 10)
-            .cast("long")
-            .alias("sh"),
-        )
-        # three consumers: document-frequency agg, ranked join, verify
-        # arrays — one materialization (see _prefix_jaccard_pairs)
-        .localCheckpoint(eager=False)
+    sized, ranked = _allpairs_ranked(
+        _shingle_hash60_frame(shingled, id_col=id_col), id_col=id_col
     )
-    dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__df").asc(), F.col("sh").asc()
+    pre = _ranked_side(
+        ranked.where(
+            F.col("__rn") <= F.col("n_sh") - _tceil(t, F.col("n_sh")) + 1
+        ),
+        id_col, "contained", "a",
     )
-
-    def _tceil(ncol):  # same safe-epsilon discipline as the Jaccard kernel
-        return F.ceil(F.lit(t) * ncol - F.lit(1e-9))
-
-    ranked = ex.join(dfreq, "sh").withColumn("__rn", F.row_number().over(w))
-    pre = ranked.where(
-        F.col("__rn") <= F.col("n_sh") - _tceil(F.col("n_sh")) + 1
-    ).select(
-        F.col(id_col).alias("contained"),
-        F.col("n_sh").alias("n_a"),
-        F.col("__rn").alias("__ra"),
-        "sh",
-    )
-    full = ranked.select(
-        F.col(id_col).alias("container"),
-        F.col("n_sh").alias("n_b"),
-        F.col("__rn").alias("__rb"),
-        "sh",
-    )
-    alpha = _tceil(F.col("n_a"))
+    full = _ranked_side(ranked, id_col, "container", "b")
+    alpha = _tceil(t, F.col("n_a"))
     capacity = (
         F.least(F.col("n_a") - F.col("__ra"), F.col("n_b") - F.col("__rb"))
         + 1
@@ -1071,14 +1025,11 @@ def _prefix_containment_pairs(
         .select("contained", "container")
         .dropDuplicates(["contained", "container"])
     )
-    arrs = ex.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("sh")).alias("__arr")
+    va = sized.select(
+        F.col(id_col).alias("contained"), F.col("__hs").alias("__a")
     )
-    va = arrs.select(
-        F.col(id_col).alias("contained"), F.col("__arr").alias("__a")
-    )
-    vb = arrs.select(
-        F.col(id_col).alias("container"), F.col("__arr").alias("__b")
+    vb = sized.select(
+        F.col(id_col).alias("container"), F.col("__hs").alias("__b")
     )
     return (
         cand.join(va, "contained")
@@ -1135,12 +1086,10 @@ def ngram_jaccard_pairs_prefix(
     ngram_jaccard_pairs and gated by dedup_jaccard_prefix against the
     same co-count oracle family.
     """
-    df = _ensure_parallelism(df, id_col)
-    shingled = df.select(
-        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
-    )
     return _prefix_jaccard_pairs(
-        shingled, id_col=id_col, threshold=threshold
+        _shingled(df, id_col=id_col, text_col=text_col, n=n),
+        id_col=id_col,
+        threshold=threshold,
     )
 
 
@@ -1173,6 +1122,60 @@ def _shingle_hash60_frame(shingled: DataFrame, *, id_col: str) -> DataFrame:
     ).localCheckpoint(eager=False)
 
 
+def _tceil(t: float, ncol: Column) -> Column:
+    """``ceil(t * n)`` for the AllPairs prefix, length and position
+    bounds. Computed in float it can land just ABOVE an exact integer
+    (0.55 * 20 = 11.000000000000002 -> ceil 12, true 11), which would
+    shorten the prefix below the AllPairs lemma's bound and over-tighten
+    the length filter — silently dropping pairs whose score is exactly
+    t. Subtracting an epsilon far larger than the product's
+    representation error (but far smaller than 1) errs only in the safe
+    direction: a longer prefix / looser filter admits extra candidates,
+    and the exact verify removes them."""
+    return F.ceil(F.lit(t) * ncol - F.lit(1e-9))
+
+
+def _allpairs_ranked(
+    hashed: DataFrame, *, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The AllPairs ranking (Bayardo et al. WWW'07) both prefix kernels
+    share, over a :func:`_shingle_hash60_frame` result. Returns
+    ``(sized, ranked)``: sized = (id, __hs, n_sh) for documents with at
+    least one shingle — the verify operands; ranked = one (id, n_sh,
+    sh, __df, __rn) row per shingle, ``__rn`` numbering each document's
+    hashes rarest-first by global document frequency with the hash as
+    tie-break — a total order every document shares, so hot head
+    shingles sort last and stay out of the prefixes. Re-exploding the
+    materialized long arrays per consumer is a cheap Generate over a
+    LogicalRDD — no sha, no string handling."""
+    sized = hashed.select(
+        id_col, "__hs", F.size("__hs").alias("n_sh")
+    ).where(F.col("n_sh") > 0)
+    ex = sized.select(
+        id_col, "n_sh", explode_nofilter(F.col("__hs")).alias("sh")
+    )
+    dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("__df").asc(), F.col("sh").asc()
+    )
+    return sized, ex.join(dfreq, "sh").withColumn(
+        "__rn", F.row_number().over(w)
+    )
+
+
+def _ranked_side(
+    ranked: DataFrame, id_col: str, pair_id: str, side: str
+) -> DataFrame:
+    """One side of a prefix kernel's shingle join: (``pair_id``,
+    ``n_<side>``, ``__r<side>``, sh) rows from :func:`_allpairs_ranked`."""
+    return ranked.select(
+        F.col(id_col).alias(pair_id),
+        F.col("n_sh").alias(f"n_{side}"),
+        F.col("__rn").alias(f"__r{side}"),
+        "sh",
+    )
+
+
 def _prefix_jaccard_pairs(
     shingled: DataFrame, *, id_col: str, threshold: float
 ) -> DataFrame:
@@ -1196,49 +1199,12 @@ def _prefix_jaccard_pairs_hashed(
     split out so the LSH eval gates can share ONE hashed frame between
     this exact side and the banded-candidate side."""
     t = float(threshold)
-    sized = hashed.select(
-        id_col, "__hs", F.size("__hs").alias("n_sh")
-    ).where(F.col("n_sh") > 0)
-    # re-exploding the materialized long arrays per consumer is a cheap
-    # Generate over a LogicalRDD — no sha, no string handling
-    ex = sized.select(
-        id_col, "n_sh", explode_nofilter(F.col("__hs")).alias("sh")
+    sized, ranked = _allpairs_ranked(hashed, id_col=id_col)
+    pre = ranked.where(
+        F.col("__rn") <= F.col("n_sh") - _tceil(t, F.col("n_sh")) + 1
     )
-    dfreq = ex.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("__df").asc(), F.col("sh").asc()
-    )
-
-    # ceil(t * n) computed in float can land just ABOVE an exact
-    # integer (0.55 * 20 = 11.000000000000002 -> ceil 12, true 11),
-    # which would shorten the prefix below the AllPairs lemma's bound
-    # and over-tighten the length filter — silently dropping pairs
-    # whose Jaccard is exactly t. Subtracting an epsilon far larger
-    # than the product's representation error (but far smaller than 1)
-    # errs only in the safe direction: a longer prefix / looser filter
-    # admits extra candidates, and the exact verify removes them.
-    def _tceil(ncol):
-        return F.ceil(F.lit(t) * ncol - F.lit(1e-9))
-
-    prefix_len = F.col("n_sh") - _tceil(F.col("n_sh")) + 1
-    pre = (
-        ex.join(dfreq, "sh")
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= prefix_len)
-        .select(id_col, "n_sh", "sh", "__rn")
-    )
-    a = pre.select(
-        F.col(id_col).alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-        F.col("__rn").alias("__ra"),
-        "sh",
-    )
-    b = pre.select(
-        F.col(id_col).alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-        F.col("__rn").alias("__rb"),
-        "sh",
-    )
+    a = _ranked_side(pre, id_col, "id_a", "a")
+    b = _ranked_side(pre, id_col, "id_b", "b")
     # PPJoin POSITION filter (Xiao et al. WWW'08 §3.2): both docs'
     # shingle lists are sorted by the same (global df, sh) total order.
     # The capacity bound overlap <= min(n_a - ra, n_b - rb) + 1 holds
@@ -1251,11 +1217,7 @@ def _prefix_jaccard_pairs_hashed(
     # Jaccard threshold in overlap terms is o >= ceil(t/(1+t) *
     # (n_a + n_b)); rows whose capacity bound can't reach it are pruned
     # BEFORE the pair ever fetches its full arrays for the verify.
-    # Same safe-epsilon discipline as _tceil: erring looser only admits
-    # candidates the exact verify removes.
-    alpha = F.ceil(
-        F.lit(t / (1.0 + t)) * (F.col("n_a") + F.col("n_b")) - F.lit(1e-9)
-    )
+    alpha = _tceil(t / (1.0 + t), F.col("n_a") + F.col("n_b"))
     capacity = (
         F.least(F.col("n_a") - F.col("__ra"), F.col("n_b") - F.col("__rb"))
         + 1
@@ -1264,8 +1226,8 @@ def _prefix_jaccard_pairs_hashed(
         a.join(b, "sh")
         .where(
             (F.col("id_a") < F.col("id_b"))
-            & (F.col("n_b") >= _tceil(F.col("n_a")))
-            & (F.col("n_a") >= _tceil(F.col("n_b")))
+            & (F.col("n_b") >= _tceil(t, F.col("n_a")))
+            & (F.col("n_a") >= _tceil(t, F.col("n_b")))
             & (capacity >= alpha)
         )
         .select("id_a", "id_b")
@@ -1273,16 +1235,11 @@ def _prefix_jaccard_pairs_hashed(
     )
     # verify arrays come straight from the materialized per-doc sorted
     # arrays — no groupBy/collect_list exchange to rebuild them
-    va = sized.select(F.col(id_col).alias("id_a"), F.col("__hs").alias("__a"))
-    vb = sized.select(F.col(id_col).alias("id_b"), F.col("__hs").alias("__b"))
-    inter = F.size(F.array_intersect("__a", "__b"))
-    union = F.size("__a") + F.size("__b") - inter
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= F.lit(t))
-        .select("id_a", "id_b", "jaccard")
+    return _jaccard_verify(
+        cand,
+        sized.select(F.col(id_col).alias("id_a"), F.col("__hs").alias("sh_a")),
+        sized.select(F.col(id_col).alias("id_b"), F.col("__hs").alias("sh_b")),
+        t,
     )
 
 
@@ -1303,10 +1260,7 @@ def minhash_signatures(
     pass ``cache=False`` when YOU persist it (e.g. the standing-corpus
     side of a per-batch ingestion loop — persist once, reuse every
     batch, unpersist on corpus rollover)."""
-    df = _ensure_parallelism(df, id_col)
-    shingled = df.select(
-        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
-    )
+    shingled = _shingled(df, id_col=id_col, text_col=text_col, n=n)
     sig = (
         shingled.withColumn("hs", shingle_hashes_col(F.col("shingles")))
         .withColumn("sig", minhash_signature_col(F.col("hs"), num_hashes))
@@ -1317,16 +1271,41 @@ def minhash_signatures(
     return sig.cache() if cache else sig
 
 
+def _jaccard_col(a: str, b: str) -> Column:
+    """Exact Jaccard ``|a ∩ b| / |a ∪ b|`` of two distinct-element
+    arrays (shingle sets or their sorted 60-bit hashes)."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def _agreement_col(a: str, b: str) -> Column:
+    """Matching positions of two equal-length MinHash signatures;
+    divided by their length it is the unbiased Jaccard estimate
+    (E[matches/k] = J)."""
+    return F.size(
+        F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda m: m)
+    )
+
+
 def _jaccard_verify(
-    candidates: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+    candidates: DataFrame,
+    side_a: DataFrame,
+    side_b: DataFrame,
+    threshold: float,
+    score: Column | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verification of (id_a, id_b) candidates against the
-    two shingle sides — the shared tail of every banded MinHash path."""
-    verified = candidates.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    """Verify (id_a, id_b) candidates against two sides keyed ``id_a`` /
+    ``id_b``: keep ``(id_a, id_b, jaccard)`` rows whose ``score`` is at
+    least ``threshold``. The default score is the exact Jaccard of the
+    sides' ``sh_a`` / ``sh_b`` arrays; the signature-agreement verifies
+    pass their estimate instead. The shared tail of the AllPairs kernel
+    and every banded MinHash path."""
+    if score is None:
+        score = _jaccard_col("sh_a", "sh_b")
     return (
-        verified.withColumn("jaccard", inter / union)
+        candidates.join(side_a, "id_a")
+        .join(side_b, "id_b")
+        .withColumn("jaccard", score)
         .where(F.col("jaccard") >= F.lit(float(threshold)))
         .select("id_a", "id_b", "jaccard")
     )
@@ -1396,10 +1375,7 @@ def lsh_eval_pair_sets(
     ``shingle_hashes_col`` computes (pinned by
     ``test_hash64_is_hash60_shifted``) — so signatures, band keys and
     the candidate set are unchanged."""
-    df = _ensure_parallelism(df, id_col)
-    shingled = df.select(
-        F.col(id_col), word_shingles_col(F.col(text_col), n).alias("shingles")
-    )
+    shingled = _shingled(df, id_col=id_col, text_col=text_col, n=n)
     hashed = _shingle_hash60_frame(shingled, id_col=id_col)
     exact = _prefix_jaccard_pairs_hashed(
         hashed, id_col=id_col, threshold=threshold
@@ -1448,27 +1424,20 @@ def minhash_lsh_pairs(
     )
     candidates = _band_candidates(sig, id_col, bands, num_hashes // bands)
     if verify == "estimate":
-        sg_a = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-        sg_b = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-        matches = F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda b: b,
-            )
-        )
-        return (
-            candidates.join(sg_a, "id_a")
-            .join(sg_b, "id_b")
-            .withColumn("jaccard", matches / F.lit(float(num_hashes)))
-            .where(F.col("jaccard") >= F.lit(float(threshold)))
-            .select("id_a", "id_b", "jaccard")
-        )
-    if verify != "exact":
+        col, a, b = "sig", "sig_a", "sig_b"
+        score = _agreement_col(a, b) / F.lit(float(num_hashes))
+    elif verify == "exact":
+        col, a, b, score = "shingles", "sh_a", "sh_b", None
+    else:
         raise ValueError(f"unknown verify: {verify!r}")
-    # fetch shingles back only for the (few) candidate pairs
-    sh_a = sig.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sig.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    return _jaccard_verify(candidates, sh_a, sh_b, threshold)
+    # fetch signatures / shingles back only for the (few) candidate pairs
+    return _jaccard_verify(
+        candidates,
+        sig.select(F.col(id_col).alias("id_a"), F.col(col).alias(a)),
+        sig.select(F.col(id_col).alias("id_b"), F.col(col).alias(b)),
+        threshold,
+        score,
+    )
 
 
 def minhash_band_sweep(
@@ -1508,7 +1477,7 @@ def minhash_band_sweep(
     for b in bands_grid:
         if num_hashes % b:
             raise ValueError(f"bands={b} does not divide num_hashes={num_hashes}")
-    members, groups = _shingle_set_groups(
+    _, groups = _shingle_set_groups(
         df, id_col=id_col, text_col=text_col, n=n
     )
     reps = (
@@ -1556,15 +1525,13 @@ def minhash_band_sweep(
         F.col("__gsize").alias("gs_b"),
         F.col("shingles").alias("sh_b"),
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     weighted = (
         cross.join(ga, "rep_a")
         .join(gb, "rep_b")
         .select(
             "bands",
             (F.col("gs_a") * F.col("gs_b")).alias("w"),
-            F.when(inter / union >= F.lit(float(threshold)), 1)
+            F.when(_jaccard_col("sh_a", "sh_b") >= F.lit(float(threshold)), 1)
             .otherwise(0)
             .alias("ok"),
         )
@@ -1757,19 +1724,19 @@ def gemm_neardup_pairs(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    ids = np.array([r[0] for r in rows])
     M = np.array([r[1] for r in rows], dtype=np.float64)
     M_unit = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
     bc = df.sparkSession.sparkContext.broadcast((ids, M_unit))
     thr = float(threshold)
 
+    id_type = df.schema[id_col].dataType
     schema = T.StructType(
         [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
             T.StructField(sim_alias, T.DoubleType()),
         ]
     )
@@ -1779,7 +1746,7 @@ def gemm_neardup_pairs(
         for pdf in batches:
             if not len(pdf):
                 continue
-            part_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            part_ids = pdf[id_col].to_numpy()
             P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             P_unit = P / np.maximum(np.linalg.norm(P, axis=1, keepdims=True), 1e-300)
             sims = P_unit @ all_unit.T  # (rows_part, N)
@@ -2145,7 +2112,6 @@ def connected_components(
     max_iter: int = 30,
     algorithm: str = "star",
     stats: dict | None = None,
-    fixed_rounds: int | None = None,
 ) -> DataFrame:
     """Connected components over an undirected duplicate-pair graph.
     Returns one row per node that appears in a pair: (``out_id``,
@@ -2175,19 +2141,6 @@ def connected_components(
 
     Pass ``stats={}`` to receive ``stats["rounds"]`` (checkpointed
     rounds actually executed) for either algorithm.
-
-    ``fixed_rounds`` (star only): run exactly that many rounds with NO
-    per-round convergence probe — one driver action per round
-    (the checkpoint) instead of two (checkpoint + probe agg). Use
-    when the duplicate graph's longest chain is known-bounded (LSH
-    near-dup chains rarely exceed a few dozen hops:
-    ``ceil(log2(chain)) + 1`` rounds suffice — paths halve per round).
-    The structural probe stays the default because it EARLY-EXITS:
-    typical duplicate graphs converge in 1-3 rounds, far under any
-    safe a-priori bound, the probe detects the star-forest fixpoint AT
-    the converged round (r12 — the old unchanged-signature probe
-    needed one extra full no-op round to certify), and an
-    already-canonical star input runs zero rounds.
     """
     if algorithm == "star":
         return _cc_star(
@@ -2198,10 +2151,7 @@ def connected_components(
             out_comp=out_comp,
             max_iter=max_iter,
             stats=stats,
-            fixed_rounds=fixed_rounds,
         )
-    if fixed_rounds is not None:
-        raise ValueError("fixed_rounds only applies to algorithm='star'")
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     return _cc_label_propagation(
@@ -2224,7 +2174,6 @@ def _cc_star(
     out_comp: str,
     max_iter: int,
     stats: dict | None,
-    fixed_rounds: int | None = None,
 ) -> DataFrame:
     """Alternating large-star/small-star (see :func:`connected_components`).
 
@@ -2349,17 +2298,7 @@ def _cc_star(
         return row["viol"] == 0
 
     rounds = 0
-    if fixed_rounds is not None:
-        # probeless execution: exactly one driver action per round (the
-        # lineage-truncating checkpoint); correct as long as
-        # fixed_rounds covers the true convergence count — extra
-        # rounds are no-ops over the already-star edge set.
-        for _ in range(int(fixed_rounds)):
-            edges = _small_star(_large_star(edges)).localCheckpoint(
-                eager=True
-            )
-            rounds += 1
-    elif not _is_star_forest(edges):
+    if not _is_star_forest(edges):
         for _ in range(max_iter):
             edges = _small_star(_large_star(edges)).localCheckpoint(
                 eager=True
@@ -3144,44 +3083,24 @@ def incremental_neardup_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     if verify == "estimate":
-        matches = F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda b: b,
-            )
-        )
-        verified = (
-            candidates.join(
-                new_side.select(
-                    F.col("new_id").alias("id_a"), F.col("sig").alias("sig_a")
-                ),
-                "id_a",
-            )
-            .join(
-                corpus_side.select(
-                    F.col("corpus_id").alias("id_b"),
-                    F.col("sig").alias("sig_b"),
-                ),
-                "id_b",
-            )
-            .withColumn("jaccard", matches / F.lit(float(num_hashes)))
-            .where(F.col("jaccard") >= F.lit(float(threshold)))
-            .select("id_a", "id_b", "jaccard")
-        )
+        new_col, corpus_col, a, b = "sig", "sig", "sig_a", "sig_b"
+        score = _agreement_col(a, b) / F.lit(float(num_hashes))
     elif verify == "exact":
-        verified = _jaccard_verify(
-            candidates,
-            new_side.select(
-                F.col("new_id").alias("id_a"), F.col("new_sh").alias("sh_a")
-            ),
-            corpus_side.select(
-                F.col("corpus_id").alias("id_b"),
-                F.col("corpus_sh").alias("sh_b"),
-            ),
-            threshold,
-        )
+        new_col, corpus_col, a, b = "new_sh", "corpus_sh", "sh_a", "sh_b"
+        score = None
     else:
         raise ValueError(f"unknown verify: {verify!r}")
+    verified = _jaccard_verify(
+        candidates,
+        new_side.select(
+            F.col("new_id").alias("id_a"), F.col(new_col).alias(a)
+        ),
+        corpus_side.select(
+            F.col("corpus_id").alias("id_b"), F.col(corpus_col).alias(b)
+        ),
+        threshold,
+        score,
+    )
     return verified.select(
         F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"),
         "jaccard",

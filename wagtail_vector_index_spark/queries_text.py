@@ -11,7 +11,7 @@ chosen so the planted near-duplicates in the synthetic corpus surface
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wagtail_vector_index_spark.catalog import _t, register
@@ -394,6 +394,59 @@ def pipeline_quality_filter(spark, sf_dir):
     )
 
 
+def _train_eval_jaccard(docs: DataFrame, eval_set: set[str]) -> DataFrame:
+    """(train_id, eval_id, jaccard): 3-gram Jaccard of every training /
+    eval document pair sharing a shingle (eval = docs whose source is in
+    ``eval_set``) — the cross-set co-count join both decontamination
+    gates run, keyed on the 32-bit ``sha_hash64`` of each shingle.
+
+    The hashed shingles are built ONCE into a lazily-checkpointed
+    ARRAY-grain frame (one row per doc): referencing the shingle
+    expression from both size() and explode() lets CollapseProject
+    inline (= recompute) it per consumer, and the train/eval branches
+    would double that again. localCheckpoint, not cache(): blocks
+    materialize inside the gate's single action and are released by
+    the ContextCleaner when the frame drops — a session-lifetime cache
+    of the shingle table was the r7 contamination-report leak. Array
+    grain beats exploded grain: ~n_sh x fewer materialized rows, and
+    each branch explodes only after its source filter."""
+    from wagtail_vector_index_spark.functions.text_analysis import (
+        shingle_hashes_col,
+        word_shingles_col,
+    )
+
+    shingled = docs.select(
+        "doc_id",
+        "source",
+        F.array_distinct(
+            shingle_hashes_col(word_shingles_col(F.col("text"), 3))
+        ).alias("shingles"),
+    ).localCheckpoint(eager=False)
+
+    is_eval = F.col("source").isin(eval_set)
+    train = shingled.where(~is_eval).select(
+        F.col("doc_id").alias("train_id"),
+        F.size("shingles").alias("n_t"),
+        F.explode("shingles").alias("sh"),
+    )
+    ev = shingled.where(is_eval).select(
+        F.col("doc_id").alias("eval_id"),
+        F.size("shingles").alias("n_e"),
+        F.explode("shingles").alias("sh"),
+    )
+    ni = F.col("ni")
+    return (
+        train.join(ev, "sh")
+        .groupBy("train_id", "eval_id", "n_t", "n_e")
+        .agg(F.count(F.lit(1)).alias("ni"))
+        .select(
+            "train_id",
+            "eval_id",
+            (ni / (F.col("n_t") + F.col("n_e") - ni)).alias("jaccard"),
+        )
+    )
+
+
 @register(
     "pipeline_decontaminate",
     oracle=f"""
@@ -433,50 +486,11 @@ def pipeline_decontaminate(spark, sf_dir):
     sharing a hash count as one intersection; both engines hash
     identically so the gate stays exact, and at 32 bits the expectation
     is negligible below ~10^4 distinct shingles per doc pair."""
-    from wagtail_vector_index_spark.functions.text_analysis import (
-        shingle_hashes_col,
-        word_shingles_col,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     eval_set = {"src0", "src1"}
-    # shingle+hash ONCE into a lazily-checkpointed ARRAY-grain frame
-    # (one row per doc) — referencing the shingle expression from both
-    # size() and explode() lets CollapseProject inline (= recompute) it
-    # per consumer, and the train/eval branches below would double that
-    # again. localCheckpoint (not cache): blocks materialize inside the
-    # gate's single action and are RELEASED by the ContextCleaner when
-    # the frame drops — a session-lifetime cache of the shingle table
-    # was the r7 contamination-report leak, and this gate had the same
-    # pattern. Array grain beats exploded grain: ~n_sh x fewer
-    # materialized rows, branches explode after their source filter.
-    shingled = docs.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            shingle_hashes_col(word_shingles_col(F.col("text"), 3))
-        ).alias("shingles"),
-    ).localCheckpoint(eager=False)
-    train = shingled.where(~F.col("source").isin(eval_set)).select(
-        F.col("doc_id").alias("train_id"),
-        F.size("shingles").alias("n_t"),
-        F.explode("shingles").alias("sh"),
-    )
-    ev = shingled.where(F.col("source").isin(eval_set)).select(
-        F.col("doc_id").alias("eval_id"),
-        F.size("shingles").alias("n_e"),
-        F.explode("shingles").alias("sh"),
-    )
-    inter = (
-        train.join(ev, "sh")
-        .groupBy("train_id", "eval_id", "n_t", "n_e")
-        .agg(F.count(F.lit(1)).alias("ni"))
-    )
     contaminated = (
-        inter.where(
-            F.col("ni") / (F.col("n_t") + F.col("n_e") - F.col("ni"))
-            >= F.lit(0.5)
-        )
+        _train_eval_jaccard(docs, eval_set)
+        .where(F.col("jaccard") >= F.lit(0.5))
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
@@ -3707,49 +3721,13 @@ def pipeline_contamination_report(spark, sf_dir):
     rather than the raw string (the join key dominated this gate's
     shuffle bytes; oracle replays the identical hash; collision caveat
     as on the prefix-filter dedup path)."""
-    from wagtail_vector_index_spark.functions.text_analysis import (
-        shingle_hashes_col,
-        word_shingles_col,
-    )
-
     docs = _t(spark, sf_dir, "documents")
-    eval_set = {"src0", "src1"}
-    # lazy localCheckpoint, NOT cache(): the hashed shingle frame feeds
-    # both sides of the self-join, so it must materialize once — but a
-    # session-lifetime cache of the job's largest intermediate is a
-    # memory leak (r7 verdict). The checkpointed blocks are computed on
-    # the gate's single action and released by the ContextCleaner when
-    # the result frame is dropped; no eager count, no extra pass.
-    # Checkpoint at the ARRAY grain (one row per doc), not the exploded
-    # gram grain: same sha work saved, ~n_sh x fewer materialized rows,
-    # and each branch explodes only after its source filter.
-    shingled = docs.select(
-        "doc_id", "source",
-        F.array_distinct(
-            shingle_hashes_col(word_shingles_col(F.col("text"), 3))
-        ).alias("shingles"),
-    ).localCheckpoint(eager=False)
-    train = shingled.where(~F.col("source").isin(eval_set)).select(
-        F.col("doc_id").alias("train_id"),
-        F.size("shingles").alias("n_t"),
-        F.explode("shingles").alias("sh"),
-    )
-    ev = shingled.where(F.col("source").isin(eval_set)).select(
-        F.col("doc_id").alias("eval_id"),
-        F.size("shingles").alias("n_e"),
-        F.explode("shingles").alias("sh"),
-    )
-    j = F.col("__ni") / (F.col("n_t") + F.col("n_e") - F.col("__ni"))
-    inter = (
-        train.join(ev, "sh")
-        .groupBy("train_id", "eval_id", "n_t", "n_e")
-        .agg(F.count(F.lit(1)).alias("__ni"))
-        .withColumn("__j", j)
-        .where(F.col("__j") >= 0.3)
+    inter = _train_eval_jaccard(docs, {"src0", "src1"}).where(
+        F.col("jaccard") >= 0.3
     )
     out = inter.groupBy("eval_id").agg(
         F.count(F.lit(1)).alias("n_contaminating"),
-        F.round(F.max("__j"), 6).alias("max_jaccard"),
+        F.round(F.max("jaccard"), 6).alias("max_jaccard"),
     )
     return out.orderBy("eval_id")
 
@@ -4370,7 +4348,9 @@ def dedup_minhash_estimate(spark, sf_dir):
     as the production dedup path; the match count is one zip_with
     fold, the calibration rollup a 17-key agg."""
     from wagtail_vector_index_spark.operators.dedup import (
+        _agreement_col,
         _band_candidates,
+        _jaccard_col,
         minhash_signatures,
     )
 
@@ -4387,18 +4367,13 @@ def dedup_minhash_estimate(spark, sf_dir):
         F.col("sig").alias("sig_b"),
         F.col("shingles").alias("sh_b"),
     )
-    matches = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda b: b,
-        )
-    ).cast("long")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     scored = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select(matches.alias("matches"), (inter / union).alias("exact_j"))
+        .select(
+            _agreement_col("sig_a", "sig_b").cast("long").alias("matches"),
+            _jaccard_col("sh_a", "sh_b").alias("exact_j"),
+        )
     )
     return (
         scored.groupBy("matches")
