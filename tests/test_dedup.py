@@ -411,10 +411,8 @@ def test_pack_sequences_budget_invariant(spark, documents_df):
 
 
 def test_semantic_dedup_prunes_within_cluster_only(spark):
-    from wagtail_vector_index_spark.operators.dedup import (
-        assign_centroids,
-        semantic_dedup,
-    )
+    from wagtail_vector_index_spark.operators.dedup import semantic_dedup
+    from wagtail_vector_index_spark.operators.knn import ivf_assign
 
     # two orthogonal clusters: 11/12 are near-dups of 10 within cluster A,
     # 21 is a near-dup of 20 within cluster B; pruning never crosses
@@ -429,7 +427,8 @@ def test_semantic_dedup_prunes_within_cluster_only(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
 
-    assigned = assign_centroids(df, cents, vec_col="embedding")
+    cdf = spark.createDataFrame(cents, "cid int, cv array<double>")
+    assigned = ivf_assign(df, cdf, index_vec="embedding")
     cid = {r["vec_id"]: r["cid"] for r in assigned.collect()}
     assert cid == {10: 0, 11: 0, 12: 0, 20: 1, 21: 1}
 
@@ -441,23 +440,9 @@ def test_semantic_dedup_prunes_within_cluster_only(spark):
     assert kept == [10, 20]
 
 
-def test_assign_centroids_tie_goes_to_lowest_cid(spark):
-    from wagtail_vector_index_spark.operators.dedup import assign_centroids
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    # both centroids equally similar to (1,1): tie must go to cid 3 (lowest)
-    cents = [(7, [1.0, 0.0]), (3, [0.0, 1.0])]
-    out = assign_centroids(df, cents, vec_col="embedding").collect()
-    assert out[0]["cid"] == 3
-
-
 def test_assign_centroids_udf_matches_expression_twin(spark):
-    from wagtail_vector_index_spark.operators.dedup import (
-        assign_centroids,
-        assign_centroids_udf,
-    )
+    from wagtail_vector_index_spark.operators.dedup import assign_centroids_udf
+    from wagtail_vector_index_spark.operators.knn import ivf_assign
 
     rows = [
         (i, [((i * 13 + j * 7) % 23) / 23.0 + 0.05 for j in range(8)])
@@ -467,7 +452,11 @@ def test_assign_centroids_udf_matches_expression_twin(spark):
     cents = [(int(i), rows[i][1]) for i in (3, 11, 27)]
     via_expr = {
         r["vec_id"]: r["cid"]
-        for r in assign_centroids(df, cents, vec_col="embedding").collect()
+        for r in ivf_assign(
+            df,
+            spark.createDataFrame(cents, "cid int, cv array<double>"),
+            index_vec="embedding",
+        ).collect()
     }
     via_udf = {
         r["vec_id"]: r["cid"]

@@ -3,11 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from wagtail_vector_index_spark.operators.kmeans import (
-    _assign,
-    inertia,
-    train_codebook,
-)
+from wagtail_vector_index_spark.operators.kmeans import inertia, train_codebook
+from wagtail_vector_index_spark.operators.knn import ivf_assign
 
 
 @pytest.fixture(scope="module")
@@ -18,11 +15,9 @@ def vectors(spark, embeddings_df):
 
 
 def test_training_reduces_inertia(vectors):
-    init = [
-        (i, [float(x) for x in r["vector"]])
-        for i, r in enumerate(vectors.orderBy("vec_id").limit(8).collect())
-    ]
-    before = inertia(_assign(vectors, init, vec_col="vector"))
+    # one round's assignment is against the initial codebook (the 8
+    # lowest-id vectors)
+    before = inertia(train_codebook(vectors, k=8, iterations=1)[1])
     centroids, assigned = train_codebook(vectors, k=8, iterations=3)
     after = inertia(assigned)
     assert after <= before + 1e-12
@@ -78,6 +73,24 @@ def test_trained_codebook_improves_ivf_recall(spark, vectors):
     trained, _ = train_codebook(vectors, k=8, iterations=3)
     assert recall(trained) >= recall(naive) - 0.2  # not worse (tolerance)
     assert recall(trained) > 0
+
+
+def test_mixed_dimension_row_is_dropped_from_training(spark):
+    """A row whose dimension matches no centroid takes no part in Lloyd
+    training (as in the IVF build): the centroids equal those trained
+    without it, and it is absent from the assignment."""
+    rows = [
+        (0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.5, 0.1]), (3, [0.1, 2.0]),
+        (4, [1.4, -0.1]), (5, [-0.1, 1.0]), (6, [1.3, 0.0]), (7, [0.0, 1.2]),
+    ]
+    schema = "vec_id long, vector array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    mixed = spark.createDataFrame(rows + [(8, [100.0, 100.0, 100.0])], schema)
+    want, _ = train_codebook(clean, k=2, iterations=2)
+    got, assigned = train_codebook(mixed, k=2, iterations=2)
+    assert got == want
+    ids = sorted(r["vec_id"] for r in assigned.collect())
+    assert ids == list(range(8))
 
 
 def test_norm_hoisted_cosine_bit_identical(vectors):
@@ -141,7 +154,10 @@ def test_onelevel_mean_agg_matches_posexplode_reference(vectors):
         (i, [float(x) for x in r["vector"]])
         for i, r in enumerate(vectors.orderBy("vec_id").limit(8).collect())
     ]
-    assigned = _assign(vectors, init, vec_col="vector")
+    assigned = ivf_assign(
+        vectors,
+        vectors.sparkSession.createDataFrame(init, "cid int, cv array<double>"),
+    )
     dim = len(init[0][1])
     one_level = {
         r["cid"]: [float(r[i + 1]) for i in range(dim)]

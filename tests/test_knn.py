@@ -874,3 +874,44 @@ def test_ivf_assign_tie_break_and_dim_guard(spark):
     )
     survivors = ivf_assign(mixed, cdf).select("vec_id", "cid").collect()
     assert [(r["vec_id"], r["cid"]) for r in survivors] == [(8, 3)]
+
+
+_FIRST_FRAME_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from wagtail_vector_index_spark.session import build_session
+spark = build_session(master="local[1]")
+from wagtail_vector_index_spark.operators.kmeans import train_codebook
+from wagtail_vector_index_spark.operators.knn import ivf_assign
+# created first, so its columns carry the session's lowest expression ids
+idx = spark.createDataFrame(
+    [(i, [float(i), 1.0, 2.0]) for i in range(6)],
+    "vec_id long, vector array<double>",
+)
+cdf = spark.createDataFrame(
+    [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])], "cid int, cv array<double>"
+)
+print(len(ivf_assign(idx, cdf).collect()))
+print(train_codebook(idx, k=2, iterations=1)[1].count())
+"""
+
+
+def test_ivf_assign_and_training_on_a_sessions_first_frame():
+    """The dim-match join predicate must survive the optimizer when the
+    row vector has the session's lowest expression ids: an exists()
+    lambda over the vector was copied into the codebook side there and
+    failed with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND. Needs a fresh JVM,
+    hence the subprocess."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FIRST_FRAME_SCRIPT, repo],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split()[-2:] == ["6", "6"]

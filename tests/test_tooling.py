@@ -1,6 +1,6 @@
 """Guards and smoke tests for the repo's tooling: one place builds Spark
-sessions, the bench's ``--only`` mode, and the ``tools/stage.py``
-replicas recipe."""
+sessions, one place builds the cosine-argmax fold, the bench's
+``--only`` mode, and the ``tools/stage.py`` replicas recipe."""
 
 from __future__ import annotations
 
@@ -17,6 +17,10 @@ import pyarrow.parquet as pq
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SESSION_BUILDERS = {
     os.path.join("wagtail_vector_index_spark", "session.py"),
+}
+DOT_PRODUCT_CALLERS = {
+    os.path.join("wagtail_vector_index_spark", "functions", "vector.py"),
+    os.path.join("wagtail_vector_index_spark", "operators", "knn.py"),
 }
 
 
@@ -67,6 +71,24 @@ def test_only_session_py_builds_spark_sessions():
                     staging_imports.append(f"{rel}:{node.lineno} imports {mod}")
     assert not builders, f"SparkSession.builder outside session.py: {builders}"
     assert not staging_imports, staging_imports
+
+
+def test_only_vector_and_knn_call_dot_product():
+    """The centroid cosine argmax is built once, in ``knn.py``: Lloyd
+    training and the IVF build share it instead of re-folding their
+    own ``dot_product``."""
+    callers = []
+    for rel, path in _python_files():
+        if not rel.startswith("wagtail_vector_index_spark" + os.sep):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=rel)
+        for node in ast.walk(tree):
+            fn = node.func if isinstance(node, ast.Call) else None
+            name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+            if name == "dot_product" and rel not in DOT_PRODUCT_CALLERS:
+                callers.append(f"{rel}:{node.lineno}")
+    assert not callers, f"dot_product( outside vector.py/knn.py: {callers}"
 
 
 def test_bench_only_rejects_unknown_query_before_spark_starts():

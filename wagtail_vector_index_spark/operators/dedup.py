@@ -1725,11 +1725,13 @@ def gemm_neardup_pairs(
     import numpy as np
     import pandas as pd
 
+    from wagtail_vector_index_spark.operators.knn import _unit_rows
+
     rows = df.select(id_col, vec_col).collect()
     ids = np.array([r[0] for r in rows])
-    M = np.array([r[1] for r in rows], dtype=np.float64)
-    M_unit = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
-    bc = df.sparkSession.sparkContext.broadcast((ids, M_unit))
+    bc = df.sparkSession.sparkContext.broadcast(
+        (ids, _unit_rows([r[1] for r in rows]))
+    )
     thr = float(threshold)
 
     id_type = df.schema[id_col].dataType
@@ -1747,9 +1749,7 @@ def gemm_neardup_pairs(
             if not len(pdf):
                 continue
             part_ids = pdf[id_col].to_numpy()
-            P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            P_unit = P / np.maximum(np.linalg.norm(P, axis=1, keepdims=True), 1e-300)
-            sims = P_unit @ all_unit.T  # (rows_part, N)
+            sims = _unit_rows(pdf[vec_col].tolist()) @ all_unit.T
             ra, ca = np.where(sims >= thr)
             keep = part_ids[ra] < all_ids[ca]
             yield pd.DataFrame(
@@ -2518,54 +2518,8 @@ def simhash_pairs_dense(
     )
 
 
-def assign_centroids(
-    df: DataFrame,
-    centroids: Sequence[tuple[int, Sequence[float]]],
-    *,
-    vec_col: str = "embedding",
-    sim_alias: str = "centroid_sim",
-    cid_alias: str = "cid",
-) -> DataFrame:
-    """Nearest-centroid (max-cosine) assignment as a PURE MAP expression.
-
-    ``centroids`` is a small-by-contract driver-side list (k centroids —
-    the same contract as the kmeans codebook and ANN probe lists). Each
-    centroid enters the plan as an array literal and the row's cosine
-    against it is a sequential-fold expression, so the whole assignment
-    is a single projection: NO shuffle, NO join, NO Python stage — at
-    100 TB the assignment costs exactly one scan. (Billion-row *serving*
-    assignment belongs to the IVF index's Arrow/GEMM path; this
-    expression form exists for bounded k and exact SQL replayability.)
-    Ties on cosine go to the lowest centroid id
-    (``array_max`` over ``struct(sim, -cid)``), matching a
-    ``row_number() OVER (ORDER BY sim DESC, cid)`` SQL twin.
-    """
-    from wagtail_vector_index_spark.functions.vector import (
-        cosine_similarity,
-    )
-
-    entries = []
-    for cid, cvec in centroids:
-        lit_vec = F.array(*[F.lit(float(x)) for x in cvec]).cast(
-            "array<double>"
-        )
-        sim = cosine_similarity(F.col(vec_col), lit_vec)
-        entries.append(
-            F.struct(
-                sim.alias("s"), F.lit(-int(cid)).cast("long").alias("negcid")
-            )
-        )
-    best = F.array_max(F.array(*entries))
-    return (
-        df.withColumn("__best", best)
-        .withColumn(sim_alias, F.col("__best.s"))
-        .withColumn(cid_alias, (-F.col("__best.negcid")).cast("int"))
-        .drop("__best")
-    )
-
-
 def assign_centroids_udf(centroids: Sequence[tuple[int, Sequence[float]]]):
-    """Arrow-batched twin of :func:`assign_centroids`: one numpy GEMM per
+    """Arrow-batched twin of ``knn.ivf_assign``: one numpy GEMM per
     batch (~µs/row) instead of k interpreted fold-cosines per row
     (~1 ms/row at k=16 × dim 64 — measured 2.4 s for a 2k-row corpus).
     Ties go to the lowest centroid id (centroids sorted by cid, and

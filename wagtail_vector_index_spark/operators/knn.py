@@ -102,6 +102,92 @@ def similarity_join(
     )
 
 
+def _cosine_argmax_exprs(vec_col: str) -> tuple[Column, Column, Column]:
+    """``(dim_match, best, cid)`` Column trees of the nearest-centroid
+    cosine argmax over a :func:`_assign_over` codebook — the one
+    assignment expression of the IVF build and of Lloyd training.
+
+    ``best`` is the ``array_max`` of per-centroid ``(s, ni)`` =
+    ``(cosine, -index)`` structs in ascending-cid order, so ties go to
+    the lowest cid. NORM-HOISTED (r12): ||row|| folds once per row
+    (bound to a lambda variable via a 1-element transform, so the
+    optimizer cannot re-inline it per centroid) and ||centroid|| comes
+    from ``__cbn``; same sequential folds and ``dot / (nv * nc)``
+    grouping as ``functions.vector.cosine_similarity``, so every
+    similarity and argmax is bit-identical to the per-pair fold.
+    Columns are trees keyed by NAME, so one build serves every Lloyd
+    round (r13, OPTIMIZATION_r13.md Batch 2)."""
+    from wagtail_vector_index_spark.functions.vector import (
+        dot_product,
+        l2_norm,
+    )
+
+    vec = F.col(vec_col)
+
+    def _entries(nv):
+        # mismatched dims score null, which struct-max ranks below
+        # every real score
+        return F.transform(
+            F.col("__cb"),
+            lambda c, i: F.struct(
+                F.when(
+                    F.array_size(c["v"]) == F.array_size(vec),
+                    dot_product(vec, c["v"])
+                    / (nv * F.element_at(F.col("__cbn"), i + F.lit(1))),
+                ).alias("s"),
+                (-i).alias("ni"),
+            ),
+        )
+
+    best = F.element_at(
+        F.transform(
+            F.array(l2_norm(vec)), lambda nv: F.array_max(_entries(nv))
+        ),
+        1,
+    )
+    # The no-matching-dim filter must NOT reference __best:
+    # PushDownPredicates substitutes a filtered computed column's
+    # EXPRESSION below the projection (guide §4.4's duplication — no
+    # cheapness guard, unlike CollapseProject), which would evaluate
+    # the whole k-sim argmax twice per row (measured +0.65s on the
+    # sf0.1 eval gates). A lookup in the codebook's centroid SIZES
+    # (``__cbd``) is the equivalent predicate at negligible cost, and
+    # __best then has a single consumer. It must hold no lambda over
+    # the row vector either: an ``exists(__cb, c -> size(c.v) =
+    # size(vector))`` join predicate was copied into the codebook side
+    # by InferFiltersFromConstraints + PushDownPredicates when the
+    # vector's attribute had a low expression id (a session's first
+    # frame), failing the task with "Could not find vector".
+    dim_match = F.array_contains(F.col("__cbd"), F.array_size(vec))
+    cid = F.element_at(
+        F.col("__cb"), (-F.col("__best.ni") + F.lit(1)).cast("int")
+    )["i"]
+    return dim_match, best, cid
+
+
+def _assign_over(
+    index_df: DataFrame, codebook: DataFrame, dim_match: Column,
+    best: Column, out_cols: list[Column],
+) -> DataFrame:
+    """Rows of ``index_df`` with a same-dimension centroid, projected to
+    ``out_cols`` over the argmax ``__best`` against ``codebook``: one
+    row whose ``__cb`` is ``array<struct<i, v>>`` sorted by ``i``. Each
+    centroid's norm (``__cbn``) and size (``__cbd``) fold once per
+    codebook, and the codebook is broadcast."""
+    from wagtail_vector_index_spark.functions.vector import l2_norm
+
+    cb = codebook.withColumns({
+        "__cbn": F.transform(F.col("__cb"), lambda c: l2_norm(c["v"])),
+        "__cbd": F.transform(F.col("__cb"), lambda c: F.array_size(c["v"])),
+    })
+    return (
+        index_df.crossJoin(F.broadcast(cb))
+        .where(dim_match)
+        .withColumn("__best", best)
+        .select(*out_cols)
+    )
+
+
 def ivf_assign(
     index_df: DataFrame,
     centroids_df: DataFrame,
@@ -117,96 +203,25 @@ def ivf_assign(
     (id, cid) keys a repartition/bucketing so each posting list is
     co-located.
 
-    ZERO-SHUFFLE (r12): the codebook is collapsed to a broadcast 1-row
-    (cid, cv) struct array sorted by cid, and the argmax is an
-    ``array_max`` over per-centroid (sim, -index) structs computed in
-    the scan projection. The previous shape exploded every index row
-    k-fold through a broadcast join and ran a row-keyed window — at
-    scale that shuffles k copies of every VECTOR payload just to keep
-    the best row; now the index side never moves. Semantics preserved
-    bit for bit: only same-dimension centroids compete (mismatched dims
-    score null, which struct-max ranks below every real score; rows
-    with NO matching-dim centroid are dropped, as the old inner join
-    did), and ascending-cid evaluation makes the (max sim, max -index)
-    tie-break identical to the old (sim desc, cid asc) window.
-
-    NORM-HOISTED (r12, second pass): cosine against k centroids used to
-    re-fold BOTH norms per (row, centroid) — 3 interpreted O(dim) folds
-    per centroid where only the dot varies. ||row|| now folds ONCE per
-    row (bound to a lambda variable via a 1-element transform, so the
-    optimizer cannot re-inline it into the per-centroid body) and each
-    ||centroid|| folds once per CODEBOOK in the broadcast build
-    (``__cbn``). The similarity VALUE is bit-identical: same sequential
-    folds, same ``dot / (nv * nc)`` grouping as
-    ``functions.vector.cosine_similarity`` — only where the two norm
-    subtrees evaluate moved, so every argmax (and the oracle's replay
-    of it) is unchanged. ~2x fewer interpreted fold steps on the kernel
-    that IS the 100 TB IVF build's partitioning pass."""
-    from wagtail_vector_index_spark.functions.vector import (
-        dot_product,
-        l2_norm,
-    )
-
-    mat = F.broadcast(
-        centroids_df.groupBy()
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col(centroid_id).alias("i"),
-                        F.col(centroid_vec).alias("v"),
-                    )
+    ZERO-SHUFFLE (r12): the codebook is a broadcast 1-row (cid, cv)
+    struct array sorted by cid and the argmax runs in the scan
+    projection; the index side never moves. Rows with no matching-dim
+    centroid are dropped. Also the expression twin of
+    ``dedup.assign_centroids_udf``."""
+    dim_match, best, cid = _cosine_argmax_exprs(index_vec)
+    codebook = centroids_df.groupBy().agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col(centroid_id).alias("i"),
+                    F.col(centroid_vec).alias("v"),
                 )
-            ).alias("__cb")
-        )
-        .withColumn(
-            "__cbn",
-            F.transform(F.col("__cb"), lambda c: l2_norm(c["v"])),
-        )
+            )
+        ).alias("__cb")
     )
-
-    def _entries(nv):
-        return F.transform(
-            F.col("__cb"),
-            lambda c, i: F.struct(
-                F.when(
-                    F.array_size(c["v"]) == F.array_size(F.col(index_vec)),
-                    dot_product(F.col(index_vec), c["v"])
-                    / (nv * F.element_at(F.col("__cbn"), i + F.lit(1))),
-                ).alias("s"),
-                (-i).alias("ni"),
-            ),
-        )
-
-    best = F.element_at(
-        F.transform(
-            F.array(l2_norm(F.col(index_vec))),
-            lambda nv: F.array_max(_entries(nv)),
-        ),
-        1,
-    )
-    out_cols = [F.col(c) for c in index_df.columns] + [
-        F.element_at(
-            F.col("__cb"), (-F.col("__best.ni") + F.lit(1)).cast("int")
-        )["i"].alias(centroid_id)
-    ]
-    # The no-matching-dim filter must NOT reference __best:
-    # PushDownPredicates substitutes a filtered computed column's
-    # EXPRESSION below the projection (guide §4.4's duplication — no
-    # cheapness guard, unlike CollapseProject), which would evaluate
-    # the whole k-sim argmax twice per row (measured +0.65s on the
-    # sf0.1 eval gates). An exists() over the k centroid SIZES is the
-    # equivalent predicate at negligible cost, and __best then has a
-    # single consumer.
-    dim_match = F.exists(
-        F.col("__cb"),
-        lambda c: F.array_size(c["v"]) == F.array_size(F.col(index_vec)),
-    )
-    return (
-        index_df.crossJoin(mat)
-        .where(dim_match)
-        .withColumn("__best", best)
-        .select(*out_cols)
+    return _assign_over(
+        index_df, codebook, dim_match, best,
+        [F.col(c) for c in index_df.columns] + [cid.alias(centroid_id)],
     )
 
 
