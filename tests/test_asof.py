@@ -1,6 +1,7 @@
 """As-of join operator tests: backward/forward inclusive matching,
 left-join nulls, tolerance, and atomic right-row payloads."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from wagtail_vector_index_spark.operators.asof import asof_join
@@ -107,6 +108,48 @@ def test_weighted_mix_deterministic_and_rate_accurate(spark, documents_df):
     assert set(by_src) <= {"src0", "src2"}  # unlisted sources dropped
     if "src2" in by_src:
         assert 0 < by_src["src2"] < totals["src2"]
+
+
+@pytest.mark.parametrize("buckets", [100000, 7])
+def test_weighted_mix_one_sha_bucket_per_row(spark, buckets):
+    """weighted_mix hashes each key once and compares it with its
+    group's threshold from a literal map. It keeps exactly the rows of
+    the per-group OR filter it replaced (copied here as the reference):
+    absent and NULL groups and NULL keys drop, rate 0 keeps nothing and
+    rate 1 keeps every keyed row. The optimized plan holds one sha2."""
+    from wagtail_vector_index_spark.operators.skew import (
+        deterministic_keep_col,
+        weighted_mix,
+    )
+
+    def or_filter(df, weights):
+        keep = None
+        for group, rate in sorted(weights.items()):
+            cond = (F.col("source") == group) & deterministic_keep_col(
+                F.col("doc_id"), rate, buckets=buckets
+            )
+            keep = cond if keep is None else keep | cond
+        return df.where(keep)
+
+    rows = [(i, f"src{i % 6}" if i % 11 else None) for i in range(600)]
+    df = spark.createDataFrame(
+        rows + [(None, "src0"), (None, None)], "doc_id long, source string"
+    )
+    # src5 is absent from the weights
+    weights = {"src0": 1.0, "src1": 0.0, "src2": 0.5, "src3": 0.37,
+               "src4": 0.999}
+    out = weighted_mix(df, weights, buckets=buckets)
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == sorted(
+        (tuple(r) for r in or_filter(df, weights).collect()), key=repr
+    )
+    kept = {s for _, s in got}
+    assert "src0" in kept and kept <= {"src0", "src2", "src3", "src4"}
+    assert sum(s == "src0" for _, s in got) == sum(
+        i % 6 == 0 and i % 11 != 0 for i in range(600)
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sha2(") == 1
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):

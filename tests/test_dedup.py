@@ -194,7 +194,17 @@ def test_simhash_column_matches_bulk_path(spark, docs_df):
     assert col_path == bulk_path
 
 
-def test_connected_components_chain(spark):
+@pytest.fixture
+def star_route(monkeypatch):
+    """Force connected_components(algorithm="star") through the
+    large-star/small-star loop: with a driver-route limit of 0 only an
+    empty pair frame is labelled on the driver."""
+    from wagtail_vector_index_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+
+
+def test_connected_components_chain(spark, star_route):
     """Chained near-dups (1-2, 2-3, no 1-3 edge) collapse to one
     component; a disjoint pair stays separate; min id labels each."""
     from wagtail_vector_index_spark.operators.dedup import connected_components
@@ -220,7 +230,7 @@ def test_connected_components_long_chain_and_strings(spark):
     assert len(comp) == 10
 
 
-def test_connected_components_star_pointer_doubling_rounds(spark):
+def test_connected_components_star_pointer_doubling_rounds(spark, star_route):
     """Large-star/small-star converges in O(log n) rounds on a path
     graph where min-label propagation needs O(diameter): a 64-node
     chain finishes in <= 10 star rounds (vs 16 double-hop label
@@ -250,7 +260,7 @@ def test_connected_components_star_pointer_doubling_rounds(spark):
     assert star_stats["rounds"] < label_stats["rounds"]
 
 
-def test_connected_components_structural_probe_zero_rounds(spark):
+def test_connected_components_structural_probe_zero_rounds(spark, star_route):
     """r12 structural convergence probe: a canonical star-forest input
     (center < children, center in the v slot) is detected as the
     fixpoint BEFORE any round runs; a REVERSED star (center in the u
@@ -313,7 +323,9 @@ def test_connected_components_structural_probe_zero_rounds(spark):
     assert got == {1: 1, 2: 1, 9: 9}
 
 
-def test_connected_components_star_matches_label_on_mixed_graph(spark):
+def test_connected_components_star_matches_label_on_mixed_graph(
+    spark, star_route
+):
     """Both algorithms produce identical labels on a graph mixing a
     clique, a chain, self-loops, duplicate/reversed edges, and string
     ids (lexicographic minima)."""
@@ -337,6 +349,183 @@ def test_connected_components_star_matches_label_on_mixed_graph(spark):
     assert star == label
     assert star["z9"] == "z9"
     assert star["a4"] == "a1" and star["c3"] == "c1"
+
+
+def _cc_labels(pairs, **kwargs):
+    from wagtail_vector_index_spark.operators.dedup import connected_components
+
+    stats: dict = {}
+    out = connected_components(pairs, stats=stats, **kwargs)
+    rows = sorted((tuple(r) for r in out.collect()), key=repr)
+    return rows, stats
+
+
+def _random_cc_edges(rng, ids):
+    """Chains, cliques, stars in both orientations and self-loops over
+    disjoint slices of the shuffled ``ids``, plus reversed and
+    duplicate copies of some edges and a few bridges that merge
+    shapes."""
+    ids = list(ids)
+    rng.shuffle(ids)
+    edges, pos = [], 0
+    for shape in ("chain", "clique", "star", "rstar", "loops") * 3:
+        g = ids[pos : pos + rng.randint(2, 6)]
+        pos += len(g)
+        if shape == "chain":
+            edges += list(zip(g, g[1:]))
+        elif shape == "clique":
+            edges += [(a, b) for i, a in enumerate(g) for b in g[i + 1 :]]
+        elif shape == "star":
+            edges += [(x, g[0]) for x in g[1:]]
+        elif shape == "rstar":
+            edges += [(g[0], x) for x in g[1:]]
+        else:
+            edges += [(x, x) for x in g]
+    edges += [(b, a) for a, b in rng.sample(edges, 5)]
+    edges += rng.sample(edges, 5)
+    edges += [tuple(rng.sample(ids[:pos], 2)) for _ in range(3)]
+    rng.shuffle(edges)
+    return edges
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_connected_components_routes_agree(spark, monkeypatch, seed, kind):
+    """The driver route (union-find on a collected small pair frame),
+    the large-star/small-star loop and min-label propagation give
+    identical labels on seeded mixes of chains, cliques, stars,
+    reversed and duplicate edges and self-loops. String ids include
+    non-ASCII ones: Python's code-point order equals Spark's UTF-8
+    byte order."""
+    import random
+
+    from wagtail_vector_index_spark.operators import dedup
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 10_000), 80)
+    if kind == "string":
+        alphabet = ["a", "Z", "9", "é", "ß", "中", "\U0001d538", "~"]
+        ids = [
+            "".join(rng.choices(alphabet, k=1 + n % 4)) + str(n)
+            for n in ids
+        ]
+    pairs = spark.createDataFrame(
+        _random_cc_edges(rng, ids), f"id_a {kind}, id_b {kind}"
+    )
+    driver, driver_stats = _cc_labels(pairs)
+    label, _ = _cc_labels(pairs, algorithm="label")
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    star, star_stats = _cc_labels(pairs)
+    assert driver_stats == {"rounds": 0, "route": "driver"}
+    assert star_stats["route"] == "star" and star_stats["rounds"] >= 1
+    assert driver == star == label
+    assert len({c for _, c in driver}) < len(driver)
+
+
+def test_connected_components_null_ids_driver_matches_star(
+    spark, monkeypatch
+):
+    """A NULL id labels itself (one row) and an edge with a NULL end
+    joins nothing, on both routes."""
+    from wagtail_vector_index_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (None, 3), (4, None), (None, None), (2, 5), (6, 6)],
+        "id_a long, id_b long",
+    )
+    driver, driver_stats = _cc_labels(pairs)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    star, star_stats = _cc_labels(pairs)
+    assert (driver_stats["route"], star_stats["route"]) == ("driver", "star")
+    assert driver == star
+    assert driver == sorted(
+        [(1, 1), (2, 1), (5, 1), (3, 3), (4, 4), (6, 6), (None, None)],
+        key=repr,
+    )
+
+
+def test_connected_components_driver_route_boundary(spark, monkeypatch):
+    """The route turns on the raw row count, self-loops and duplicate
+    edges included: at a limit of 5, five raw rows are labelled on the
+    driver and six run the star loop, with the same labels."""
+    from wagtail_vector_index_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 5)
+    five = [(3, 4), (4, 5), (5, 5), (4, 3), (8, 9)]
+    got = {}
+    for edges in (five, five + [(9, 1)]):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        labels, stats = _cc_labels(pairs)
+        got[stats["route"]] = labels
+        assert labels == _cc_labels(pairs, algorithm="label")[0]
+    assert got["driver"] == [(3, 3), (4, 3), (5, 3), (8, 8), (9, 8)]
+    assert got["star"] == [(1, 1), (3, 3), (4, 3), (5, 3), (8, 1), (9, 1)]
+
+
+def test_connected_components_unordered_id_types_take_star_route(spark):
+    """Only integral and default-collation string ids are labelled on
+    the driver: doubles (Spark sorts NaN last, Python does not order
+    it) and collated strings keep the star loop."""
+    doubles = spark.createDataFrame(
+        [(1.5, 2.5), (2.5, 0.5), (7.0, 8.0)], "id_a double, id_b double"
+    )
+    labels, stats = _cc_labels(doubles)
+    assert stats["route"] == "star"
+    assert labels == [
+        (0.5, 0.5), (1.5, 0.5), (2.5, 0.5), (7.0, 7.0), (8.0, 7.0)
+    ]
+    lcase = spark.createDataFrame(
+        [("b", "c"), ("a", "b")], "id_a string, id_b string"
+    ).select(
+        F.collate("id_a", "UTF8_LCASE").alias("id_a"),
+        F.collate("id_b", "UTF8_LCASE").alias("id_b"),
+    )
+    labels, stats = _cc_labels(lcase)
+    assert stats["route"] == "star"
+    assert labels == [("a", "a"), ("b", "a"), ("c", "a")]
+
+
+def test_connected_components_small_graph_job_count(spark):
+    """A 3-edge chain is labelled on the driver: the raw checkpoint, one
+    bounded collect and the caller's action. The star loop ran 34 Spark
+    jobs for it (two checkpoints, a star-forest probe per round, two
+    rounds and the final labelling join)."""
+    from wagtail_vector_index_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    group = "cc_small_graph_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        got = {
+            r["id"]: r["component"]
+            for r in connected_components(pairs).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) < 34 // 2
+
+
+def test_minhash_lsh_pairs_leaves_no_cached_plan(spark):
+    """Each call reuses its signature frame through a lazy
+    localCheckpoint, released with the frame: repeated calls add no
+    entry to the session's CacheManager (a cache() per call added one
+    each, and nothing unpersisted it)."""
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    base = "the quick brown fox jumps over the lazy dog near the river"
+    for i in range(3):
+        df = spark.createDataFrame(
+            [(10 * i + 1, base + " bank"), (10 * i + 2, base + " bend")],
+            "doc_id long, text string",
+        )
+        got = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(df).collect()}
+        assert got == {(10 * i + 1, 10 * i + 2)}
+    assert cache_manager.isEmpty()
 
 
 def test_keep_representatives_exact_beats_clique_approx(spark):
@@ -1040,7 +1229,9 @@ def test_keep_representatives_exact_prefer_col(spark):
     assert kept == {2, 4, 9}
 
 
-def test_connected_components_star_cutoff_keeps_one_row_per_node(spark):
+def test_connected_components_star_cutoff_keeps_one_row_per_node(
+    spark, star_route
+):
     """max_iter exhaustion mid-collapse must degrade gracefully: one
     row per node (best-known label), never conflicting duplicates."""
     from wagtail_vector_index_spark.operators.dedup import connected_components

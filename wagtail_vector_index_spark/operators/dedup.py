@@ -1255,20 +1255,21 @@ def minhash_signatures(
     """(id, shingles, sig): the shared MinHash prep for every banded
     dedup path — shingle, hash each shingle ONCE (separate projection so
     CollapseProject can't inline the sha256 into all seed derivations),
-    derive the signature with affine arithmetic. ``cache=True`` pins the
-    frame for the band-join + verify-fetch-back double consumption;
-    pass ``cache=False`` when YOU persist it (e.g. the standing-corpus
-    side of a per-batch ingestion loop — persist once, reuse every
-    batch, unpersist on corpus rollover)."""
+    derive the signature with affine arithmetic. ``cache=True`` wraps the
+    frame in a lazy ``localCheckpoint`` so the band-join + verify-fetch-
+    back double consumption computes it once: the same optimizer barrier
+    as ``cache()``, but its blocks are released when the frame is
+    dropped instead of pinning a CacheManager entry for the session's
+    life. Pass ``cache=False`` when YOU persist it (e.g. the
+    standing-corpus side of a per-batch ingestion loop — persist once,
+    reuse every batch, unpersist on corpus rollover)."""
     shingled = _shingled(df, id_col=id_col, text_col=text_col, n=n)
     sig = (
         shingled.withColumn("hs", shingle_hashes_col(F.col("shingles")))
         .withColumn("sig", minhash_signature_col(F.col("hs"), num_hashes))
         .drop("hs")
     )
-    # no blocking count — see _exact_jaccard_pairs for why cache() alone
-    # is both the optimizer barrier and race-safe
-    return sig.cache() if cache else sig
+    return sig.localCheckpoint(eager=False) if cache else sig
 
 
 def _jaccard_col(a: str, b: str) -> Column:
@@ -2102,6 +2103,58 @@ def keep_representatives(
     return df.join(losers, id_col, "left_anti")
 
 
+# Largest pair frame (raw rows, self-loops and duplicates included) that
+# connected_components labels on the driver instead of running the
+# large-star/small-star loop. The loop's fixed cost is ~15 Spark jobs
+# even for a handful of edges; 100k rows of two ids is a few MB on the
+# driver and measured ~5x faster than the loop at that size (4 cores).
+_CC_DRIVER_MAX_EDGES = 100_000
+
+
+def _orders_like_spark_min(t: T.DataType) -> bool:
+    """True for the id types whose Python ``<`` and ``==`` equal Spark's
+    ``min`` and equality: integral types, and strings under the default
+    ``UTF8_BINARY`` collation (UTF-8 byte order is code-point order).
+    Floats (NaN sorts last in Spark, unordered in Python), collated
+    strings and every other type keep the star loop."""
+    return isinstance(
+        t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or t == T.StringType()
+
+
+def _union_find_labels(rows) -> list[tuple]:
+    """``(node, component minimum)`` for every non-NULL end of the
+    ``(u, v)`` rows, self-loops included. The root of every set is its
+    minimum, so the label is read straight off ``find``. An edge with a
+    NULL end joins nothing (as the star loop's ``u != v`` filter), and
+    NULL itself gets one ``(None, None)`` row, as in the star roster."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    has_null = False
+    for u, v in rows:
+        for x in (u, v):
+            if x is None:
+                has_null = True
+            else:
+                parent.setdefault(x, x)
+        if u is not None and v is not None:
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+    labels = [(x, find(x)) for x in parent]
+    if has_null:
+        labels.append((None, None))
+    return labels
+
+
 def connected_components(
     pairs: DataFrame,
     *,
@@ -2139,8 +2192,16 @@ def connected_components(
     (diameter 1-2), pathological for chains; the full edge set is
     joined every round.
 
+    Small graphs skip the star loop: when the pair frame has at most
+    ``_CC_DRIVER_MAX_EDGES`` rows and integral or default-collation
+    string ids, ``algorithm="star"`` collects it with one bounded job and
+    labels it with a union-find on the driver (see :func:`_cc_star`).
+    The labels are the same either way.
+
     Pass ``stats={}`` to receive ``stats["rounds"]`` (checkpointed
-    rounds actually executed) for either algorithm.
+    rounds actually executed) for either algorithm; the star algorithm
+    also sets ``stats["route"]`` to ``"driver"`` (zero rounds) or
+    ``"star"``.
     """
     if algorithm == "star":
         return _cc_star(
@@ -2210,10 +2271,40 @@ def _cc_star(
     and before r12 the second consumption re-ran the caller's whole
     pair-generation pipeline (shingle, group, pair join) inside the
     final action. One skinny localCheckpoint of (u, v) now feeds both.
+
+    Driver route: a small graph never enters the loop. When both id
+    columns share a type on which Python orders like Spark's ``min``
+    (:func:`_orders_like_spark_min`), one bounded collect of at most
+    ``_CC_DRIVER_MAX_EDGES + 1`` checkpointed rows decides; if the frame
+    fits, :func:`_union_find_labels` labels it on the driver and the
+    labels come back through ``createDataFrame`` with the ids' type
+    (``stats["rounds"] = 0``, ``stats["route"] = "driver"``). A larger
+    graph pays that one small job and runs the loop unchanged.
     """
     raw = pairs.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
     ).localCheckpoint(eager=True)
+    id_type = raw.schema["u"].dataType
+    if id_type == raw.schema["v"].dataType and _orders_like_spark_min(
+        id_type
+    ):
+        # coalesce(1): one job whose single task stops reading after
+        # the limit; a bare limit().collect() scans partitions in
+        # growing batches, one job each
+        head = raw.coalesce(1).limit(_CC_DRIVER_MAX_EDGES + 1).collect()
+        if len(head) <= _CC_DRIVER_MAX_EDGES:
+            if stats is not None:
+                stats["rounds"] = 0
+                stats["route"] = "driver"
+            return raw.sparkSession.createDataFrame(
+                _union_find_labels(head),
+                T.StructType(
+                    [
+                        T.StructField(out_id, id_type),
+                        T.StructField(out_comp, id_type),
+                    ]
+                ),
+            )
     edges = (
         raw.where(F.col("u") != F.col("v"))
         .distinct()
@@ -2308,6 +2399,7 @@ def _cc_star(
                 break
     if stats is not None:
         stats["rounds"] = rounds
+        stats["route"] = "star"
 
     # At fixpoint every component is a star oriented child→center, the
     # center being the component minimum. Labels: every child points at
@@ -2743,9 +2835,8 @@ class CorpusSignatures:
     :func:`incremental_neardup_pairs` / ``Corpus.dedup_against`` on
     every batch; call :meth:`unpersist` (or use the instance as a
     context manager) on corpus rollover. Without this, passing
-    ``corpus_df`` per batch recomputes AND cache()-pins a fresh copy of
-    the corpus signatures on every call — the storage leak the r4
-    ADVICE flagged.
+    ``corpus_df`` per batch recomputes the corpus signatures on every
+    call.
     """
 
     def __init__(self, df: DataFrame, *, _params: dict | None = None):
@@ -2972,12 +3063,12 @@ def incremental_neardup_pairs(
     **Per-batch loops**: pass ``corpus_signatures`` — a
     :class:`CorpusSignatures` (persisted once, unpersisted on corpus
     rollover) or an equivalent frame you persist yourself — instead of
-    ``corpus_df``. Passing ``corpus_df`` recomputes and cache()-pins the
-    corpus signatures on EVERY call, which leaks storage across a long
-    ingestion loop (each call pins a fresh copy). The NEW side's
-    signatures are localCheckpointed, not cache()-pinned (r5): their
-    blocks are reclaimed by the ContextCleaner when the batch's frames
-    go out of scope, so the per-batch side cannot accumulate either."""
+    ``corpus_df``. Passing ``corpus_df`` recomputes the corpus
+    signatures (shingling and hashing the whole corpus) on EVERY call.
+    Both sides' per-call signatures are lazily localCheckpointed, not
+    cache()-pinned: their blocks are reclaimed by the ContextCleaner
+    when the batch's frames go out of scope, so nothing accumulates
+    across a long ingestion loop."""
     if (corpus_df is None) == (corpus_signatures is None):
         raise ValueError(
             "pass exactly one of corpus_df or corpus_signatures"
@@ -2985,14 +3076,10 @@ def incremental_neardup_pairs(
     if isinstance(corpus_signatures, CorpusSignatures):
         corpus_signatures = corpus_signatures.df
     rows_per_band = num_hashes // bands
-    # lazy localCheckpoint instead of cache(): same double-consumption
-    # reuse (band join + verify fetch-back) and the same optimizer
-    # barrier, but self-releasing — a long ingestion loop would pin a
-    # fresh CacheManager entry per batch otherwise
     new_side = minhash_signatures(
         new_df, id_col=id_col, text_col=text_col, n=n,
-        num_hashes=num_hashes, cache=False,
-    ).localCheckpoint(eager=False)
+        num_hashes=num_hashes,
+    )
     corpus_side = (
         corpus_signatures
         if corpus_signatures is not None

@@ -107,19 +107,22 @@ def weighted_mix(
     """Deterministic dataset mixing: per-group keep rates (0..1) applied
     via the content-addressed filter — the curation step that rebalances
     a training corpus (e.g. downweight crawl, upweight reference text).
-    Groups absent from ``weights`` are dropped. One narrow filter, no
-    shuffle, no RNG."""
-    keep = None
+    Groups absent from ``weights`` (and NULL groups) are dropped. One
+    narrow filter, no shuffle, no RNG: each row hashes its key once and
+    compares the bucket with its group's threshold, looked up in a
+    literal ``group -> threshold`` map (one sha256 per row however many
+    groups there are)."""
+    if not weights:
+        raise ValueError("weights must not be empty")
+    thresholds = []
     for group, rate in sorted(weights.items()):
         if not 0.0 <= rate <= 1.0:
             raise ValueError(f"rate for {group!r} must be in [0, 1], got {rate}")
-        cond = (F.col(group_col) == group) & deterministic_keep_col(
-            F.col(key_col), rate, buckets=buckets
-        )
-        keep = cond if keep is None else keep | cond
-    if keep is None:
-        raise ValueError("weights must not be empty")
-    return df.where(keep)
+        thresholds += [F.lit(group), F.lit(int(round(rate * buckets)))]
+    return df.where(
+        sha_bucket_col(F.col(key_col), buckets=buckets)
+        < F.create_map(*thresholds)[F.col(group_col)]
+    )
 
 
 def split_col(key, fractions: dict[str, float], *, buckets: int = 100000):
